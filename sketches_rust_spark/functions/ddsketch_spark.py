@@ -2,18 +2,14 @@
 
 Design (idiomatic Spark, SURVEY.md §1.5/§3):
 
-* **partial build** — ``mapInPandas`` over the scan partitions: one vectorized
-  numpy pass per Arrow batch, one sketch per (partition x group), emitted as a
-  serialized blob row. No shuffle of raw rows, ever: this is the map-side
-  combine Catalyst cannot do for a black-box UDAF, done explicitly.
-* **final merge** — ``groupBy(keys).applyInPandas``: folds the small blobs
-  (KBs each; exactly ``num_partitions`` rows per group regardless of data
-  skew, so a zipfian group distribution cannot create a hot reducer).
-* **salted variant** — for the groupBy-based build path (useful when the
-  partial-per-partition state would be too wide, i.e. very high group
-  cardinality), an explicit deterministic salt column spreads hot groups
-  over ``num_salts`` reducers; losslessness is guaranteed by sketch
-  mergeability.
+* **two-level build** — DDSketch is one adapter of the shared engine
+  (``engine.py``): ``mapInPandas`` partials over the scan partitions (one
+  vectorized ``route_batch`` per Arrow batch, ``apply_routed`` once per
+  group at the end of the partition), then a ``groupBy(keys).applyInPandas``
+  blob merge. No shuffle of raw rows, ever.
+* **salted and weighted variants** — the same engine: the salt is one more
+  level-1 key; the weight is a second adapter input (LogCubic presets; LOG
+  presets take the JVM-native path in ``ddsketch_sql.py``).
 * **scalar extraction** — pandas UDFs over the blob column
   (``ddsketch_quantile/count/sum/min/max/avg``), registered for SQL.
 
@@ -25,7 +21,7 @@ engine, sketches-rust, and sketches-java.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Iterator, Sequence
+from typing import Sequence
 
 import numpy as np
 import pandas as pd
@@ -33,18 +29,17 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import PandasUDFType, pandas_udf
-from pyspark.sql.types import (
-    BinaryType,
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import DoubleType
 
 from ..kernel.sketch import DDSketch
-
-SKETCH_COL = "sketch"
-ROWS_COL = "rows_in"
+from .engine import (
+    SketchAdapter,
+    deferred_adapter,
+    merge_aggregate,
+    merge_udaf,
+    partial_aggregate,
+    two_level_aggregate,
+)
 
 
 @dataclass(frozen=True)
@@ -66,29 +61,19 @@ class SketchConfig:
 DEFAULT_CONFIG = SketchConfig()
 
 
-def _factorize_keys(pdf: pd.DataFrame, keys: list[str]):
-    """(int codes per row, tuple-of-key-values per code) for 1..n key columns.
-    NaN/None group keys are kept (use_na_sentinel=False), matching SQL
-    GROUP BY null-key semantics."""
-    if len(keys) == 1:
-        codes, uniques = pd.factorize(pdf[keys[0]], use_na_sentinel=False)
-        return codes, [(u,) for u in uniques]
-    per_col = [pd.factorize(pdf[k], use_na_sentinel=False) for k in keys]
-    sizes = [len(u) for _, u in per_col]
-    combined = per_col[0][0].astype(np.int64)
-    for (c, _), size in zip(per_col[1:], sizes[1:]):
-        combined = combined * size + c
-    comp_codes, comp_uniques = pd.factorize(combined)
-    # map each compact code back to the tuple of original key values
-    first_row = np.empty(len(comp_uniques), dtype=np.int64)
-    first_row[comp_codes] = np.arange(len(comp_codes))  # any representative row
-    uniques = [tuple(pdf[k].iloc[int(r)] for k in keys) for r in first_row]
-    return comp_codes, uniques
-
-
-def _key_fields(df: DataFrame, keys: Sequence[str]) -> list[StructField]:
-    by_name = {f.name: f for f in df.schema.fields}
-    return [by_name[k] for k in keys]
+def _ddsketch_adapter(config: SketchConfig) -> SketchAdapter:
+    """Deferred build: per batch ONE vectorized log/route pass
+    (``route_batch``); per group only (side, idx) slices are kept, and bucket
+    counts are materialized once per group at the end of the partition
+    (``apply_routed``) — no per-batch-per-group store bookkeeping. The
+    deferred state is ~9 bytes/row of the partition, bounded by the Arrow
+    partition size, not the table size."""
+    router = config.new()  # only for route_batch parameters
+    return deferred_adapter(
+        "ddsketch", config.new,
+        lambda pdf: router.route_batch(
+            pdf["_in"].to_numpy(dtype=np.float64, na_value=np.nan)),
+        DDSketch.apply_routed)
 
 
 def build_partials(
@@ -102,59 +87,12 @@ def build_partials(
     Runs as ``mapInPandas`` so nothing is shuffled; the output has at most
     ``num_partitions * num_groups`` rows of (keys..., sketch, rows_in).
     Column pruning: only ``keys + [value_col]`` are selected, so the parquet
-    scan never reads unrelated columns.
+    scan never reads unrelated columns. rows_in counts every row, null
+    values included.
     """
     keys = list(keys)
-    narrow = df.select(*keys, F.col(value_col).cast("double").alias(value_col))
-    out_schema = StructType(
-        _key_fields(narrow, keys)
-        + [StructField(SKETCH_COL, BinaryType(), False),
-           StructField(ROWS_COL, LongType(), False)]
-    )
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        router = config.new()  # only for route_batch parameters
-        # Deferred build: per batch, ONE vectorized log/route pass and a
-        # factorize+argsort grouping; per group we only append (side, idx)
-        # slices. Bucket counts are materialized once per group at the end of
-        # the partition — per-row cost is pure numpy, no per-batch-per-group
-        # store bookkeeping. (idx is int64 + int8 per row, so the deferred
-        # state is ~9 bytes/row of the partition — bounded by the Arrow
-        # partition size, not the table size.)
-        routed: dict[tuple, list[tuple[np.ndarray, np.ndarray]]] = {}
-        rows: dict[tuple, int] = {}
-        for pdf in batches:
-            vals = pdf[value_col].to_numpy(dtype=np.float64, na_value=np.nan)
-            side, idx = router.route_batch(vals)
-            if not keys:
-                routed.setdefault((), []).append((side, idx))
-                rows[()] = rows.get((), 0) + len(pdf)
-                continue
-            codes, uniques = _factorize_keys(pdf, keys)
-            order = np.argsort(codes, kind="stable")
-            sorted_codes = codes[order]
-            sorted_side = side[order]
-            sorted_idx = idx[order]
-            bounds = np.flatnonzero(np.diff(sorted_codes)) + 1
-            starts = np.concatenate(([0], bounds))
-            ends = np.concatenate((bounds, [len(sorted_codes)]))
-            for s, e in zip(starts, ends):
-                key = uniques[sorted_codes[s]]
-                routed.setdefault(key, []).append((sorted_side[s:e], sorted_idx[s:e]))
-                rows[key] = rows.get(key, 0) + (e - s)
-        if routed:
-            records = []
-            for key, chunks in routed.items():
-                sk = config.new()
-                side = np.concatenate([c[0] for c in chunks])
-                idx = np.concatenate([c[1] for c in chunks])
-                sk.apply_routed(side, idx)
-                records.append(
-                    dict(zip(keys, key)) | {SKETCH_COL: sk.encode(), ROWS_COL: rows[key]}
-                )
-            yield pd.DataFrame(records, columns=keys + [SKETCH_COL, ROWS_COL])
-
-    return narrow.mapInPandas(partial, schema=out_schema)
+    narrow = df.select(*keys, F.col(value_col).cast("double").alias("_in"))
+    return partial_aggregate(narrow, keys, {"ddsketch": _ddsketch_adapter(config)})
 
 
 def merge_partials(
@@ -167,27 +105,7 @@ def merge_partials(
     ``decode_and_merge_with`` streams bins straight into the receiving store
     (decode *is* merge, spec store/mod.rs:92-141) — no intermediate sketches.
     """
-    keys = list(keys)
-    out_schema = StructType(
-        _key_fields(partials, keys)
-        + [StructField(SKETCH_COL, BinaryType(), False),
-           StructField(ROWS_COL, LongType(), False)]
-    )
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = config.new()
-        for blob in pdf[SKETCH_COL]:
-            sk.decode_and_merge_with(bytes(blob))
-        head = {k: pdf[k].iloc[0] for k in keys}
-        head[SKETCH_COL] = sk.encode()
-        head[ROWS_COL] = int(pdf[ROWS_COL].sum())
-        return pd.DataFrame([head], columns=keys + [SKETCH_COL, ROWS_COL])
-
-    if keys:
-        return partials.groupBy(*keys).applyInPandas(merge, schema=out_schema)
-    return partials.groupBy(F.lit(1).alias("_g")).applyInPandas(
-        merge, schema=out_schema
-    )
+    return merge_aggregate(partials, keys, {"ddsketch": _ddsketch_adapter(config)})
 
 
 def ddsketch_aggregate(
@@ -218,8 +136,9 @@ def ddsketch_aggregate_weighted(
     Tungsten hash aggregate (map-side partial_sum, shuffle bounded by
     groups x buckets — no raw row ever crosses the shuffle or the Arrow
     boundary), then blob assembly over the tiny histogram. LogCubic presets
-    (bucket math not SQL-expressible) fall back to a groupBy+applyInPandas
-    build; prefer LOG at scale.
+    (bucket math not SQL-expressible) run the two-level engine with the
+    weight as a second adapter input: still no raw-row shuffle, but every
+    row crosses the Arrow boundary; prefer LOG at scale.
     """
     from .ddsketch_sql import _LOG_PRESETS, ddsketch_aggregate_sql
 
@@ -228,33 +147,22 @@ def ddsketch_aggregate_weighted(
         return ddsketch_aggregate_sql(df, value_col, keys, config,
                                       weight_col=weight_col)
     narrow = df.select(*keys,
-                       F.col(value_col).cast("double").alias("_v"),
+                       F.col(value_col).cast("double").alias("_in"),
                        F.col(weight_col).cast("double").alias("_w"))
     # same contract as the SQL path: invalid weights drop JVM-side, so a
     # group whose every row is dropped vanishes on BOTH branches, and
     # rows_in is the accepted weight sum (== sketch count) on both
     narrow = narrow.where(F.col("_w").isNotNull() & ~F.isnan("_w")
                           & (F.col("_w") > 0))
-    out_schema = StructType(
-        _key_fields(narrow, keys)
-        + [StructField(SKETCH_COL, BinaryType(), False),
-           StructField(ROWS_COL, LongType(), False)]
-    )
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = config.new()
-        sk.accept_many(pdf["_v"].to_numpy(np.float64, na_value=np.nan),
-                       pdf["_w"].to_numpy(np.float64, na_value=np.nan))
-        head = {k: pdf[k].iloc[0] for k in keys}
-        head[SKETCH_COL] = sk.encode()
+    adapter = deferred_adapter(
+        "ddsketch", config.new,
+        lambda pdf: (pdf["_in"].to_numpy(np.float64, na_value=np.nan),
+                     pdf["_w"].to_numpy(np.float64, na_value=np.nan)),
+        DDSketch.accept_many,
         # round, don't truncate: fractional weight sums (weights are
         # doubles) would otherwise report up to 1 low per group
-        head[ROWS_COL] = int(round(sk.get_count()))
-        return pd.DataFrame([head], columns=keys + [SKETCH_COL, ROWS_COL])
-
-    if keys:
-        return narrow.groupBy(*keys).applyInPandas(build, schema=out_schema)
-    return narrow.groupBy(F.lit(1).alias("_g")).applyInPandas(build, schema=out_schema)
+        count=lambda sk: int(round(sk.get_count())))
+    return two_level_aggregate(narrow, keys, {"ddsketch": adapter})
 
 
 def ddsketch_aggregate_salted(
@@ -265,36 +173,21 @@ def ddsketch_aggregate_salted(
     num_salts: int = 16,
     salt_from: str | None = None,
 ) -> DataFrame:
-    """Salted two-level aggregation for skewed groups on the groupBy path.
+    """Salted two-level aggregation: the salt is one more level-1 key.
 
     Level 1 groups on (keys..., salt) where salt = pmod(xxhash64(salt_from or
-    all columns), num_salts) — deterministic, so re-runs are reproducible. A
-    zipfian hot key (e.g. lang='en' at ~45%) is spread over ``num_salts``
-    reducers; level 2 merges the per-salt blobs. Mergeability makes the split
-    lossless: results are identical to the unsalted plan (tested).
+    the value), num_salts) — deterministic, so re-runs are reproducible —
+    and level 2 merges the per-salt blobs on keys. Mergeability makes the
+    split lossless: results are identical to the unsalted plan (tested).
     """
     keys = list(keys)
     salt_col = F.pmod(
         F.xxhash64(F.col(salt_from) if salt_from else F.col(value_col)),
         F.lit(num_salts),
     ).alias("_salt")
-    narrow = df.select(*keys, F.col(value_col).cast("double").alias(value_col), salt_col)
-
-    out_schema = StructType(
-        _key_fields(narrow, keys)
-        + [StructField(SKETCH_COL, BinaryType(), False),
-           StructField(ROWS_COL, LongType(), False)]
-    )
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = config.new()
-        sk.accept_many(pdf[value_col].to_numpy(dtype=np.float64, na_value=np.nan))
-        head = {k: pdf[k].iloc[0] for k in keys}
-        head[SKETCH_COL] = sk.encode()
-        head[ROWS_COL] = len(pdf)
-        return pd.DataFrame([head], columns=keys + [SKETCH_COL, ROWS_COL])
-
-    partials = narrow.groupBy(*keys, "_salt").applyInPandas(build, schema=out_schema)
+    narrow = df.select(*keys, F.col(value_col).cast("double").alias("_in"), salt_col)
+    partials = partial_aggregate(narrow, keys + ["_salt"],
+                                 {"ddsketch": _ddsketch_adapter(config)})
     return merge_partials(partials, keys, config)
 
 
@@ -349,13 +242,7 @@ def ddsketch_quantile(blobs: pd.Series, quantiles: pd.Series) -> pd.Series:
 def make_merge_udaf(config: SketchConfig = DEFAULT_CONFIG):
     """GROUPED_AGG pandas UDF: SQL-composable blob merge —
     ``SELECT lang, ddsketch_merge(sketch) FROM partials GROUP BY lang``."""
-    def merge_blobs(blobs: pd.Series) -> bytes:
-        sk = config.new()
-        for b in blobs:
-            if b is not None:
-                sk.decode_and_merge_with(bytes(b))
-        return sk.encode()
-    return pandas_udf(merge_blobs, "binary", PandasUDFType.GROUPED_AGG)
+    return merge_udaf(config.new)
 
 
 def make_build_udaf(config: SketchConfig = DEFAULT_CONFIG):

@@ -40,7 +40,8 @@ from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
 from ..kernel.mapping import LOG
 from ..kernel.sketch import DDSketch
-from .ddsketch_spark import ROWS_COL, SKETCH_COL, SketchConfig, _key_fields
+from .ddsketch_spark import SketchConfig
+from .engine import ROWS_COL, SKETCH_COL, _key_fields
 
 _LOG_PRESETS = {
     "logarithmic_collapsing_lowest_dense",

@@ -1,38 +1,29 @@
-"""Spark aggregation layer for the sibling sketches (HLL, CMS, Bloom,
+"""Spark aggregation layer for the sibling sketches (HLL, KMV, CMS, Bloom,
 t-digest, KLL).
 
-Same two-level shape as the DDSketch pandas path: mapInPandas partial per
-(scan partition x group) — no raw-row shuffle — then applyInPandas blob merge
-per group. Hashing happens JVM-side where possible (xxhash64) or as
-vectorized numpy (splitmix64, when the query needs a cross-engine-
-reproducible hash for its DuckDB oracle).
+Every family is an adapter of the two-level engine in ``engine.py`` — the
+one DDSketch runs on: a mapInPandas partial per (scan partition x group),
+no raw-row shuffle, then an applyInPandas blob merge per group. Hashing
+happens JVM-side where possible (xxhash64) or as vectorized numpy
+(splitmix64, when the query needs a cross-engine-reproducible hash for its
+DuckDB oracle), once per Arrow batch.
 
-Each kernel plugs in via a small adapter: new() / update(sketch, pdf) /
-encode / decode_and_merge. Blobs are the engines' own wire formats
-(kernel/{hll,cms,bloom,tdigest,kll}.py) — mergeable in SQL via
-``<name>_merge`` GROUPED_AGG UDFs registered by register_sibling_sql.
+Blobs are the engines' own wire formats (kernel/{hll,kmv,cms,bloom,tdigest,
+kll}.py) — mergeable in SQL via ``<name>_merge`` GROUPED_AGG UDFs
+registered by register_sibling_sql.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-from typing import Callable, Iterator, Sequence
+from typing import Sequence
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.functions import PandasUDFType, pandas_udf
-from pyspark.sql.types import (
-    BinaryType,
-    BooleanType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.pandas.functions import pandas_udf
+from pyspark.sql.types import BooleanType, DoubleType, LongType
 
 from ..kernel.bits import splitmix64
 from ..kernel.bloom import BloomFilter
@@ -41,55 +32,35 @@ from ..kernel.hll import HyperLogLog
 from ..kernel.kll import KLL
 from ..kernel.kmv import KMV
 from ..kernel.tdigest import TDigest
-from .ddsketch_spark import ROWS_COL, SKETCH_COL, _factorize_keys, _key_fields
+from .engine import SketchAdapter, merge_udaf, two_level_aggregate
 
 
-@dataclass(frozen=True)
-class SketchAdapter:
-    name: str
-    new: Callable[[], object]
-    update: Callable[[object, pd.DataFrame], None]  # consumes pdf["_in"]
-    decode_and_merge: Callable[[object, bytes], None]
+def _hash_adapter(name: str, new, hash_mode: str) -> SketchAdapter:
+    """hash_mode='pre': the input column already holds 64-bit hashes (e.g.
+    JVM xxhash64). 'splitmix': the input is a numeric id, hashed with
+    splitmix64 in numpy (cross-engine reproducible for oracles)."""
+    def prepare(pdf: pd.DataFrame) -> tuple:
+        h = pdf["_in"].to_numpy(dtype=np.int64, na_value=0).view(np.uint64)
+        return (splitmix64(h) if hash_mode == "splitmix" else h,)
+    return SketchAdapter(name, new, prepare, lambda sk, h: sk.add_hashes(h))
 
 
-def _to_u64(series: pd.Series) -> np.ndarray:
-    return series.to_numpy(dtype=np.int64, na_value=0).view(np.uint64)
+def _values_adapter(name: str, new) -> SketchAdapter:
+    return SketchAdapter(
+        name, new, lambda pdf: (pdf["_in"].to_numpy(np.float64, na_value=np.nan),),
+        lambda sk, v: sk.accept_many(v))
 
 
 def hll_adapter(p: int = 14, hash_mode: str = "pre") -> SketchAdapter:
-    """hash_mode='pre': input column already holds 64-bit hashes (e.g. JVM
-    xxhash64). 'splitmix': input is a numeric id, hashed with splitmix64 in
-    numpy (cross-engine reproducible for oracles)."""
-    def update(sk, pdf):
-        h = _to_u64(pdf["_in"])
-        if hash_mode == "splitmix":
-            h = splitmix64(h)
-        sk.add_hashes(h)
-    return SketchAdapter(
-        "hll", lambda: HyperLogLog(p), update,
-        lambda sk, b: sk.decode_and_merge_with(b))
+    return _hash_adapter("hll", lambda: HyperLogLog(p), hash_mode)
 
 
 def cms_adapter(depth: int = 5, width: int = 2048, hash_mode: str = "pre") -> SketchAdapter:
-    def update(sk, pdf):
-        h = _to_u64(pdf["_in"])
-        if hash_mode == "splitmix":
-            h = splitmix64(h)
-        sk.add_hashes(h)
-    return SketchAdapter(
-        "cms", lambda: CountMinSketch(depth, width), update,
-        lambda sk, b: sk.decode_and_merge_with(b))
+    return _hash_adapter("cms", lambda: CountMinSketch(depth, width), hash_mode)
 
 
 def bloom_adapter(m_bits: int = 1 << 20, k: int = 7, hash_mode: str = "pre") -> SketchAdapter:
-    def update(sk, pdf):
-        h = _to_u64(pdf["_in"])
-        if hash_mode == "splitmix":
-            h = splitmix64(h)
-        sk.add_hashes(h)
-    return SketchAdapter(
-        "bloom", lambda: BloomFilter(m_bits, k), update,
-        lambda sk, b: sk.decode_and_merge_with(b))
+    return _hash_adapter("bloom", lambda: BloomFilter(m_bits, k), hash_mode)
 
 
 def kmv_adapter(k: int = 256, hash_mode: str = "pre") -> SketchAdapter:
@@ -97,28 +68,19 @@ def kmv_adapter(k: int = 256, hash_mode: str = "pre") -> SketchAdapter:
     set-intersection estimates (kernel/kmv.py). 'splitmix' hashing keeps
     the retained hash set — and therefore every estimate — exactly
     reproducible in the DuckDB oracle (bottom-k = ORDER BY hash LIMIT k)."""
-    def update(sk, pdf):
-        h = _to_u64(pdf["_in"])
-        if hash_mode == "splitmix":
-            h = splitmix64(h)
-        sk.add_hashes(h)
-    return SketchAdapter(
-        "kmv", lambda: KMV(k), update,
-        lambda sk, b: sk.decode_and_merge_with(b))
+    return _hash_adapter("kmv", lambda: KMV(k), hash_mode)
 
 
 def tdigest_adapter(delta: float = 200.0) -> SketchAdapter:
-    return SketchAdapter(
-        "tdigest", lambda: TDigest(delta),
-        lambda sk, pdf: sk.accept_many(pdf["_in"].to_numpy(np.float64, na_value=np.nan)),
-        lambda sk, b: sk.decode_and_merge_with(b))
+    return _values_adapter("tdigest", lambda: TDigest(delta))
 
 
 def kll_adapter(k: int = 200) -> SketchAdapter:
-    return SketchAdapter(
-        "kll", lambda: KLL(k),
-        lambda sk, pdf: sk.accept_many(pdf["_in"].to_numpy(np.float64, na_value=np.nan)),
-        lambda sk, b: sk.decode_and_merge_with(b))
+    return _values_adapter("kll", lambda: KLL(k))
+
+
+def _input(input_col):
+    return (F.col(input_col) if isinstance(input_col, str) else input_col).alias("_in")
 
 
 def sketch_aggregate(
@@ -130,61 +92,11 @@ def sketch_aggregate(
     """Generic two-level mergeable aggregation -> (keys..., sketch, rows_in).
 
     input_col: column name or Column expression fed to the kernel as "_in".
+    Rows whose input is null are dropped before the partial.
     """
     keys = list(keys)
-    col = F.col(input_col) if isinstance(input_col, str) else input_col
-    narrow = df.select(*keys, col.alias("_in")).where(F.col("_in").isNotNull())
-    out_schema = StructType(
-        _key_fields(narrow, keys)
-        + [StructField(SKETCH_COL, BinaryType(), False),
-           StructField(ROWS_COL, LongType(), False)]
-    )
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sketches: dict[tuple, object] = {}
-        rows: dict[tuple, int] = {}
-        for pdf in batches:
-            if not keys:
-                sk = sketches.setdefault((), adapter.new())
-                adapter.update(sk, pdf)
-                rows[()] = rows.get((), 0) + len(pdf)
-                continue
-            codes, uniques = _factorize_keys(pdf, keys)
-            order = np.argsort(codes, kind="stable")
-            pdf = pdf.iloc[order]
-            sorted_codes = codes[order]
-            bounds = np.flatnonzero(np.diff(sorted_codes)) + 1
-            starts = np.concatenate(([0], bounds))
-            ends = np.concatenate((bounds, [len(sorted_codes)]))
-            for s, e in zip(starts, ends):
-                key = uniques[sorted_codes[s]]
-                sk = sketches.get(key)
-                if sk is None:
-                    sk = sketches[key] = adapter.new()
-                    rows[key] = 0
-                adapter.update(sk, pdf.iloc[s:e])
-                rows[key] += e - s
-        if sketches:
-            records = [
-                dict(zip(keys, key)) | {SKETCH_COL: sk.encode(), ROWS_COL: rows[key]}
-                for key, sk in sketches.items()
-            ]
-            yield pd.DataFrame(records, columns=keys + [SKETCH_COL, ROWS_COL])
-
-    partials = narrow.mapInPandas(partial, schema=out_schema)
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = adapter.new()
-        for blob in pdf[SKETCH_COL]:
-            adapter.decode_and_merge(sk, bytes(blob))
-        head = {k: pdf[k].iloc[0] for k in keys}
-        head[SKETCH_COL] = sk.encode()
-        head[ROWS_COL] = int(pdf[ROWS_COL].sum())
-        return pd.DataFrame([head], columns=keys + [SKETCH_COL, ROWS_COL])
-
-    if keys:
-        return partials.groupBy(*keys).applyInPandas(merge, schema=out_schema)
-    return partials.groupBy(F.lit(1).alias("_g")).applyInPandas(merge, schema=out_schema)
+    narrow = df.select(*keys, _input(input_col)).where(F.col("_in").isNotNull())
+    return two_level_aggregate(narrow, keys, {adapter.name: adapter})
 
 
 def multi_family_aggregate(
@@ -199,90 +111,22 @@ def multi_family_aggregate(
     family sketches the rows its mask selects (None = all rows). Output:
     (family, keys..., sketch, rows_in), one row per (family, group).
 
-    Shape rationale: N separate ``sketch_aggregate`` calls over one table
-    cost N scans and N Python partial stages; at 100 TB that is N passes
-    over the corpus for sketches that could share every batch. Here the
-    partial stage updates every family from each Arrow batch (masked
-    per-family), and the single blob-merge stage dispatches on the family
-    column. All supported kernels (HLL register-max, KMV bottom-k, CMS
-    counter adds, Bloom bit-OR, histogram adds) are order-insensitive, so
-    the per-family blobs equal the single-family build's byte-for-byte
-    (tested in tests/test_sibling_spark.py)."""
+    N separate ``sketch_aggregate`` calls over one table cost N scans and N
+    Python partial stages; here the partial stage updates every family from
+    each Arrow batch and the single blob-merge stage dispatches on the
+    family column. Each family's per-group update order is the one its
+    single-family build uses, so the per-family blobs equal
+    ``sketch_aggregate``'s byte-for-byte (tested in
+    tests/test_sibling_spark.py), the order-sensitive t-digest and KLL
+    included."""
     keys = list(keys)
-    col = F.col(input_col) if isinstance(input_col, str) else input_col
-    sel = [*keys, col.alias("_in")]
-    for name, (_ad, mask) in families.items():
-        sel.append((F.lit(True) if mask is None else mask).alias(f"_m_{name}"))
-    narrow = df.select(*sel).where(F.col("_in").isNotNull())
-    out_schema = StructType(
-        [StructField("family", StringType(), False)]
-        + _key_fields(narrow, keys)
-        + [StructField(SKETCH_COL, BinaryType(), False),
-           StructField(ROWS_COL, LongType(), False)]
-    )
-
+    masks = [mask.alias(f"_m_{name}") for name, (_ad, mask) in families.items()
+             if mask is not None]
+    narrow = df.select(*keys, _input(input_col), *masks).where(F.col("_in").isNotNull())
     # the partial closure must not capture `families` itself: the mask
     # Columns are py4j objects and unpicklable — ship only the adapters
     adapters = {name: ad for name, (ad, _mask) in families.items()}
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sketches: dict[tuple, object] = {}
-        rows: dict[tuple, int] = {}
-
-        def update(key: tuple, sub: pd.DataFrame) -> None:
-            for name, adapter in adapters.items():
-                m = sub[f"_m_{name}"].to_numpy(dtype=bool)
-                if not m.any():
-                    continue
-                fsub = sub if m.all() else sub[m]
-                k2 = (name, key)
-                sk = sketches.get(k2)
-                if sk is None:
-                    sk = sketches[k2] = adapter.new()
-                    rows[k2] = 0
-                adapter.update(sk, fsub)
-                rows[k2] += len(fsub)
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            if not keys:
-                update((), pdf)
-                continue
-            codes, uniques = _factorize_keys(pdf, keys)
-            order = np.argsort(codes, kind="stable")
-            pdf = pdf.iloc[order]
-            sorted_codes = codes[order]
-            bounds = np.flatnonzero(np.diff(sorted_codes)) + 1
-            starts = np.concatenate(([0], bounds))
-            ends = np.concatenate((bounds, [len(sorted_codes)]))
-            for s, e in zip(starts, ends):
-                update(uniques[sorted_codes[s]], pdf.iloc[s:e])
-        if sketches:
-            records = [
-                {"family": name} | dict(zip(keys, key))
-                | {SKETCH_COL: sk.encode(), ROWS_COL: rows[(name, key)]}
-                for (name, key), sk in sketches.items()
-            ]
-            yield pd.DataFrame(
-                records, columns=["family"] + keys + [SKETCH_COL, ROWS_COL])
-
-    partials = narrow.mapInPandas(partial, schema=out_schema)
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        name = pdf["family"].iloc[0]
-        adapter = adapters[name]
-        sk = adapter.new()
-        for blob in pdf[SKETCH_COL]:
-            adapter.decode_and_merge(sk, bytes(blob))
-        head = {"family": name} | {k: pdf[k].iloc[0] for k in keys}
-        head[SKETCH_COL] = sk.encode()
-        head[ROWS_COL] = int(pdf[ROWS_COL].sum())
-        return pd.DataFrame(
-            [head], columns=["family"] + keys + [SKETCH_COL, ROWS_COL])
-
-    return partials.groupBy("family", *keys).applyInPandas(
-        merge, schema=out_schema)
+    return two_level_aggregate(narrow, keys, adapters, by_family=True)
 
 
 # -- extraction UDFs ----------------------------------------------------------
@@ -376,16 +220,6 @@ def kll_quantile(blobs: pd.Series, quantiles: pd.Series) -> pd.Series:
     return pd.Series(out, dtype="float64")
 
 
-def _merge_udaf(decode_merge, new):
-    def merge_blobs(blobs: pd.Series) -> bytes:
-        sk = new()
-        for b in blobs:
-            if b is not None:
-                decode_merge(sk, bytes(b))
-        return sk.encode()
-    return pandas_udf(merge_blobs, "binary", PandasUDFType.GROUPED_AGG)
-
-
 def register_sibling_sql(spark: SparkSession,
                          hll_p: int = 14,
                          cms_depth: int = 5, cms_width: int = 2048,
@@ -400,22 +234,17 @@ def register_sibling_sql(spark: SparkSession,
     spark.udf.register("kmv_estimate", kmv_estimate)
     spark.udf.register("kmv_intersection", kmv_intersection)
     spark.udf.register("kmv_difference", kmv_difference)
-    spark.udf.register("kmv_merge", _merge_udaf(
-        lambda sk, b: sk.decode_and_merge_with(b), lambda: KMV(kmv_k)))
     spark.udf.register("cms_total", cms_total)
     spark.udf.register("cms_point_estimate", cms_point_estimate)
     spark.udf.register("bloom_might_contain", bloom_might_contain)
     spark.udf.register("tdigest_quantile", tdigest_quantile)
     spark.udf.register("kll_quantile", kll_quantile)
-    spark.udf.register("hll_merge", _merge_udaf(
-        lambda sk, b: sk.decode_and_merge_with(b), lambda: HyperLogLog(hll_p)))
-    spark.udf.register("cms_merge", _merge_udaf(
-        lambda sk, b: sk.decode_and_merge_with(b),
-        lambda: CountMinSketch(cms_depth, cms_width)))
-    spark.udf.register("bloom_merge", _merge_udaf(
-        lambda sk, b: sk.decode_and_merge_with(b),
-        lambda: BloomFilter(bloom_m, bloom_k)))
-    spark.udf.register("tdigest_merge", _merge_udaf(
-        lambda sk, b: sk.decode_and_merge_with(b), lambda: TDigest(tdigest_delta)))
-    spark.udf.register("kll_merge", _merge_udaf(
-        lambda sk, b: sk.decode_and_merge_with(b), lambda: KLL(kll_k)))
+    for name, new in (
+        ("kmv", lambda: KMV(kmv_k)),
+        ("hll", lambda: HyperLogLog(hll_p)),
+        ("cms", lambda: CountMinSketch(cms_depth, cms_width)),
+        ("bloom", lambda: BloomFilter(bloom_m, bloom_k)),
+        ("tdigest", lambda: TDigest(tdigest_delta)),
+        ("kll", lambda: KLL(kll_k)),
+    ):
+        spark.udf.register(f"{name}_merge", merge_udaf(new))

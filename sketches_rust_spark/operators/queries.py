@@ -489,10 +489,10 @@ SELECT g.lang, g.text FROM good g JOIN keep USING (doc_id))"""
 def salted_quantile_query(table: str, value_expr: str, groups: list[str],
                           quantiles: dict[str, float], alpha: float = ALPHA,
                           num_salts: int = 16):
-    """Skew-safe grouped build via explicit deterministic salting
-    (ddsketch_aggregate_salted): level 1 groups on (keys..., salt) so a
-    zipfian hot group spreads over num_salts reducers; level 2 merges the
-    per-salt blobs. Mergeability makes the split lossless, so the SAME
+    """Grouped build with explicit deterministic salting
+    (ddsketch_aggregate_salted): the level-1 partial keys on (keys..., salt)
+    and level 2 merges the per-salt blobs on keys. Mergeability makes the
+    split lossless, so the SAME
     unsalted quantile oracle pins it — the hard proof that salting does not
     change results."""
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1292,18 +1292,9 @@ def ann_topk_surface_query(exact_q, lsh_q, ivf_q):
     over the same probes in one long-format result (50-row driver cap):
     (method, probe_id, vec_id, score, rank). Each sub-proof unchanged."""
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # the IVF builder stages its inverted file eagerly (parquet write)
-        # while exact/LSH construction is cheap — build the three from a
-        # thread pool so the eager build overlaps the others (guide §2.6);
-        # each sub-proof and the final union are unchanged
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            futs = [(m, pool.submit(q, spark, sf_dir))
-                    for m, q in (("exact", exact_q), ("lsh", lsh_q),
-                                 ("ivf", ivf_q))]
-        parts = [f.result().select(
+        parts = [q(spark, sf_dir).select(
             F.lit(m).alias("method"), "probe_id", "vec_id", "score", "rank")
-            for m, f in futs]
+            for m, q in (("exact", exact_q), ("lsh", lsh_q), ("ivf", ivf_q))]
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)

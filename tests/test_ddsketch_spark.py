@@ -132,6 +132,8 @@ def test_sql_build_udaf(spark, documents):
 
 
 def test_null_values_ignored(spark):
+    """Null values stay out of the sketch, but the DDSketch entry points
+    count their rows in rows_in."""
     pdf = pd.DataFrame({"k": ["a", "a", "b"], "v": [1.0, None, 3.0]})
     df = spark.createDataFrame(pdf)
     agg = ddsketch_aggregate(df, "v", ["k"], CFG)
@@ -139,3 +141,8 @@ def test_null_values_ignored(spark):
     from sketches_rust_spark.kernel.sketch import DDSketch
     assert DDSketch.decode(bytes(rows["a"]["sketch"])).get_count() == 1.0
     assert DDSketch.decode(bytes(rows["b"]["sketch"])).get_count() == 1.0
+    assert rows["a"]["rows_in"] == 2
+    assert rows["b"]["rows_in"] == 1
+    salted = {r["k"]: r["rows_in"] for r in ddsketch_aggregate_salted(
+        df, "v", ["k"], CFG, num_salts=4).collect()}
+    assert salted == {"a": 2, "b": 1}

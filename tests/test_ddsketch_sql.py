@@ -276,6 +276,31 @@ def test_weighted_logcubic_falls_back_to_pandas_build(spark):
     sk = DDSketch.decode(bytes(rows[0]["sketch"]))
     assert sk.get_count() == 10.0
 
+    # integral weights plus null, NaN, 0 and negative weights (and a null
+    # value): each group's blob is byte-equal to one kernel accept_many over
+    # its rows, rows_in is the accepted weight sum, and a group whose every
+    # weight is invalid vanishes
+    nan = float("nan")
+    data = [("a", 1.0, 2.0), ("a", 10.0, 3.0), ("a", 100.0, 5.0),
+            ("a", 7.5, None), ("a", 3.0, nan), ("a", 42.0, 0.0),
+            ("a", 9.0, -1.0), ("a", None, 4.0),
+            ("b", -5.0, 1.0), ("b", 0.0, 2.0), ("b", 2.5, 3.0),
+            ("c", 8.0, -2.0), ("c", 8.0, nan)]
+    df = spark.createDataFrame(data, "g string, v double, w double")
+
+    def kernel(sub):
+        sk = cfg.new()
+        sk.accept_many(np.array([nan if v is None else v for _, v, _ in sub]),
+                       np.array([nan if w is None else w for _, _, w in sub]))
+        return sk.encode()
+
+    got = {r["g"]: (bytes(r["sketch"]), r["rows_in"]) for r in
+           ddsketch_aggregate_weighted(df, "v", "w", ["g"], cfg).collect()}
+    assert got == {"a": (kernel([r for r in data if r[0] == "a"]), 10),
+                   "b": (kernel([r for r in data if r[0] == "b"]), 6)}
+    total = ddsketch_aggregate_weighted(df, "v", "w", [], cfg).collect()
+    assert [(bytes(r["sketch"]), r["rows_in"]) for r in total] == [(kernel(data), 16)]
+
 
 def test_quantile_oracle_rejects_collapse_without_max_bins():
     import pytest

@@ -1,5 +1,7 @@
 """Spark-level tests for sibling-sketch aggregation."""
 
+import hashlib
+
 import numpy as np
 import pytest
 
@@ -193,3 +195,74 @@ def test_multi_family_aggregate_blobs_equal_single_family(spark, events):
         for r in agg.collect():
             want[(fam, r["_g"])] = (bytes(r["sketch"]), r["rows_in"])
     assert got == want
+
+
+# sha256 of t-digest / KLL blobs over a fixed three-partition input (each
+# partition is two Arrow batches, 10,000 and 5,000 rows, at the default
+# batch size).
+# Both kernels' bytes depend on how a group's rows are split into update
+# calls and in which order the calls come, so the digests pin the engine's
+# one-update-per-(batch, group) sequence as well as the kernels.
+_ORDER_SENSITIVE_PINS = {
+    ("tdigest", (0,)): "0ca346c7636f1dc2903cf6a3f925f397df4c8908e5be7912c0bd12b8c7da96c5",
+    ("tdigest", (1,)): "3ed5846f6083ff874e0a21b7b58f73d86eda335231720d531f058c1ecd038c7a",
+    ("tdigest", (2,)): "64df5f0a7984960a3fa714b73014b0f1e8aa94ea7898fe389cca1bd102f4c335",
+    ("tdigest", (3,)): "55a1c91d252171b0fc9c6be4faaf9cda51c2b5d8ada39e6bdb04cc3e1d9f4322",
+    ("tdigest", ()): "5e5acfdf0de9c7793d2e5619b2d74cfb26217336cf655e2ca909e1584ccd6f4f",
+    ("kll", (0,)): "ad0fed650b34840d7f5fca93344df1dd6ace58a68ebe0a8d72b1e359a45d2a33",
+    ("kll", (1,)): "b989cf22401408fef21a77256e6d4309f3bb4aba8e8a3ea7952230c0cb7223a1",
+    ("kll", (2,)): "23e0b483f950d7dd7c33e5a32cb7e74c44843668d7ca33f30f22ea8bf33c94a5",
+    ("kll", (3,)): "2438cca9346e0cf8a824aaa1a8a3d812994f6c58be269825ace0a7d5d7676e63",
+    ("kll", ()): "36c34e5f7935c7dc89dde86453ee05846942057417f4f99da4ebe1e71abe8bf5",
+}
+
+
+def _digests(rows, keys):
+    return {(r["family"], tuple(r[k] for k in keys)):
+            (hashlib.sha256(bytes(r["sketch"])).hexdigest(), r["rows_in"])
+            for r in rows}
+
+
+@pytest.mark.parametrize("keys", [["g"], []])
+def test_order_sensitive_blobs_pinned(spark, keys):
+    """t-digest and KLL blobs equal the pinned digests through both
+    sketch_aggregate and multi_family_aggregate (the two families sharing
+    one pass)."""
+    from sketches_rust_spark.functions.sketch_udafs import multi_family_aggregate
+
+    df = spark.range(45000, numPartitions=3).select(
+        (F.col("id") % 4).alias("g"),
+        (((F.col("id") * 7919) % 10007).cast("double") / 7.0 - 300.0).alias("v"))
+    adapters = {"tdigest": tdigest_adapter(100.0), "kll": kll_adapter(64)}
+    want = {(fam, key): (digest, 45000 // 4 if keys else 45000)
+            for (fam, key), digest in _ORDER_SENSITIVE_PINS.items()
+            if len(key) == len(keys)}
+
+    single = {}
+    for fam, adapter in adapters.items():
+        rows = sketch_aggregate(df, "v", keys, adapter).withColumn(
+            "family", F.lit(fam)).collect()
+        single |= _digests(rows, keys)
+    multi = _digests(multi_family_aggregate(
+        df, "v", keys, {f: (a, None) for f, a in adapters.items()}).collect(), keys)
+    assert single == want
+    assert multi == want
+
+
+def test_sibling_rows_in_drops_null_inputs(spark):
+    """Sibling entry points drop rows whose input is null before the
+    partial, so rows_in never counts them (unlike the DDSketch entry
+    points, which count every row)."""
+    from sketches_rust_spark.functions.sketch_udafs import multi_family_aggregate
+
+    df = spark.createDataFrame(
+        [("a", 1.0), ("a", None), ("b", 3.0), ("b", None), ("c", None)],
+        "k string, v double")
+    single = {r["k"]: r["rows_in"]
+              for r in sketch_aggregate(df, "v", ["k"], kll_adapter(64)).collect()}
+    multi = {(r["family"], r["k"]): r["rows_in"]
+             for r in multi_family_aggregate(df, "v", ["k"], {
+                 "kll": (kll_adapter(64), None),
+                 "tdigest": (tdigest_adapter(50.0), F.col("k") == "b")}).collect()}
+    assert single == {"a": 1, "b": 1}
+    assert multi == {("kll", "a"): 1, ("kll", "b"): 1, ("tdigest", "b"): 1}
