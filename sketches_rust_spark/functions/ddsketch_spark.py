@@ -7,9 +7,11 @@ Design (idiomatic Spark, SURVEY.md §1.5/§3):
   vectorized ``route_batch`` per Arrow batch, ``apply_routed`` once per
   group at the end of the partition), then a ``groupBy(keys).applyInPandas``
   blob merge. No shuffle of raw rows, ever.
-* **salted and weighted variants** — the same engine: the salt is one more
-  level-1 key; the weight is a second adapter input (LogCubic presets; LOG
-  presets take the JVM-native path in ``ddsketch_sql.py``).
+* **weighted variant** — the same engine with the weight as a second
+  adapter input (LogCubic presets; LOG presets take the JVM-native path in
+  ``ddsketch_sql.py``). ``ddsketch_aggregate_salted`` is kept as a name for
+  ``ddsketch_aggregate``: the map-side partial leaves a salt nothing to
+  spread.
 * **scalar extraction** — pandas UDFs over the blob column
   (``ddsketch_quantile/count/sum/min/max/avg``), registered for SQL.
 
@@ -173,22 +175,12 @@ def ddsketch_aggregate_salted(
     num_salts: int = 16,
     salt_from: str | None = None,
 ) -> DataFrame:
-    """Salted two-level aggregation: the salt is one more level-1 key.
-
-    Level 1 groups on (keys..., salt) where salt = pmod(xxhash64(salt_from or
-    the value), num_salts) — deterministic, so re-runs are reproducible —
-    and level 2 merges the per-salt blobs on keys. Mergeability makes the
-    split lossless: results are identical to the unsalted plan (tested).
-    """
-    keys = list(keys)
-    salt_col = F.pmod(
-        F.xxhash64(F.col(salt_from) if salt_from else F.col(value_col)),
-        F.lit(num_salts),
-    ).alias("_salt")
-    narrow = df.select(*keys, F.col(value_col).cast("double").alias("_in"), salt_col)
-    partials = partial_aggregate(narrow, keys + ["_salt"],
-                                 {"ddsketch": _ddsketch_adapter(config)})
-    return merge_partials(partials, keys, config)
+    """``ddsketch_aggregate`` under its older salted name. The level-1
+    partial already combines map-side, so one group reaches level 2 as one
+    blob per scan partition whatever its skew and a salt would spread
+    nothing. ``num_salts`` and ``salt_from`` are kept for callers; they
+    cannot change the result or the plan."""
+    return ddsketch_aggregate(df, value_col, keys, config)
 
 
 # ---------------------------------------------------------------------------

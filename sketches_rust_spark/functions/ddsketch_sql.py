@@ -14,8 +14,11 @@ N1), so bucketing + counting compiles to a whole-stage-codegen hash aggregate:
   reduces to <= #buckets rows per map task before the shuffle.
 
 Python then assembles the reference-wire-format blob from each group's tiny
-histogram (rows crossing the boundary = buckets, not input rows), or skips
-blobs entirely and computes the quantile walk with window functions.
+histogram (rows crossing the boundary = buckets, not input rows) with the
+kernel's one cell insert, ``DDSketch.apply_routed``, or skips blobs entirely
+and computes the quantile walk with window functions. ``ddsketch_histogram``
+is the one SQL cell build (value guard, weight guard, count or weight sum);
+the streaming window histogram calls it too.
 
 Parity note: JVM ln/exp may differ from numpy's by 1 ulp, which can flip a
 value sitting within ~1e-13 of a bucket boundary into the adjacent bucket.
@@ -84,16 +87,28 @@ def value_guard(value: Column, config: SketchConfig) -> Column:
             & (F.abs(v) != F.lit(float("inf"))))
 
 
+def _bucket_value(config: SketchConfig) -> Column:
+    """The representative value of a histogram cell, as the blob path
+    reports it: 0 for the zero bucket, else side * exp(idx / multiplier) *
+    (1 + relative_accuracy)."""
+    m = _require_log_mapping(config).index_mapping
+    return (F.when(F.col("side") == 0, F.lit(0.0))
+            .otherwise(F.col("side") * F.exp(F.col("idx") / F.lit(m.multiplier))
+                       * F.lit(1.0 + m.relative_accuracy)))
+
+
 def ddsketch_histogram(
     df: DataFrame,
     value_col: str,
-    keys: Sequence[str] = (),
+    keys: Sequence[str | Column] = (),
     config: SketchConfig = SketchConfig("logarithmic_collapsing_lowest_dense", 0.01, 2048),
     weight_col: str | None = None,
 ) -> DataFrame:
     """(keys..., side, idx, c): the sketch as a relational histogram, computed
     by a native hash aggregate. This IS the partial+final aggregation — done
-    by Tungsten with map-side combine, no UDF in the per-row path.
+    by Tungsten with map-side combine, no UDF in the per-row path. It is the
+    one SQL cell build: every batch and streaming histogram comes from here.
+    A key may be a Column, e.g. a streaming ``F.window``.
 
     weight_col: optional per-row insert weight (weighted accept semantics —
     null/NaN/non-positive weights drop the row, matching
@@ -138,18 +153,9 @@ def blobs_from_histogram(
 
     def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
         sk = config.new()
-        side = pdf["side"].to_numpy(np.int64)
-        idx = pdf["idx"].to_numpy(np.int64)
         c = pdf["c"].to_numpy(np.float64)
-        pos = side == 1
-        if pos.any():
-            sk.positive_value_store.add_many(idx[pos], c[pos])
-        neg = side == -1
-        if neg.any():
-            sk.negative_value_store.add_many(idx[neg], c[neg])
-        zero = side == 0
-        if zero.any():
-            sk.zero_count += float(c[zero].sum())
+        sk.apply_routed(pdf["side"].to_numpy(np.int64),
+                        pdf["idx"].to_numpy(np.int64), c)
         head = {k: pdf[k].iloc[0] for k in keys}
         head[SKETCH_COL] = sk.encode()
         head[ROWS_COL] = int(c.sum())
@@ -225,18 +231,11 @@ def ddsketch_stats_sql(
     the representative values of the extreme buckets). Collapsing presets
     apply their bucket-cap fold first (collapse_histogram), matching the
     blob path exactly."""
-    proto = _require_log_mapping(config)
-    m = proto.index_mapping
     keys = list(keys)
     hist = collapse_histogram(
         ddsketch_histogram(df, value_col, keys, config, weight_col),
         keys, config)
-    bucket_value = (
-        F.when(F.col("side") == 0, F.lit(0.0))
-        .otherwise(F.col("side") * F.exp(F.col("idx") / F.lit(m.multiplier))
-                   * F.lit(1.0 + m.relative_accuracy))
-    )
-    valued = hist.select(*keys, F.col("c"), bucket_value.alias("bv"))
+    valued = hist.select(*keys, F.col("c"), _bucket_value(config).alias("bv"))
 
     def rnd(col):
         return F.round(col, round_digits) if round_digits is not None else col
@@ -322,10 +321,7 @@ def histogram_quantiles(
     small by construction."""
     from pyspark.sql import Window
 
-    proto = _require_log_mapping(config)
-    m = proto.index_mapping
     keys = list(keys)
-
     walk_order = F.col("side").asc(), F.when(
         F.col("side") == -1, -F.col("idx")).otherwise(F.col("idx")).asc()
     # ungrouped: the window input is the bounded histogram (<= #buckets
@@ -337,14 +333,9 @@ def histogram_quantiles(
     w_cum = Window.partitionBy(*part).orderBy(*walk_order)
     w_all = Window.partitionBy(*part)
 
-    bucket_value = (
-        F.when(F.col("side") == 0, F.lit(0.0))
-        .otherwise(F.col("side") * F.exp(F.col("idx") / F.lit(m.multiplier))
-                   * F.lit(1.0 + m.relative_accuracy))
-    )
     walked = hist.select(
         *keys,
-        bucket_value.alias("bv"),
+        _bucket_value(config).alias("bv"),
         F.sum("c").over(w_cum).alias("cum"),
         F.sum("c").over(w_all).alias("n"),
     )

@@ -11,6 +11,11 @@ Structure: a two-sided sketch — negative values indexed by magnitude into a
 separate store, an exact zero bucket for |v| <= min_indexed_value, a positive
 store for the rest (spec sketch.rs:12-19,34-56).
 
+The insert rule lives in one pair: ``route_batch`` maps values to (side, idx)
+cells and ``apply_routed`` adds weighted cells to the stores. ``accept_many``
+is those two steps; the Spark builds call them directly (deferred partials,
+histogram blob assembly), so every build path buckets identically.
+
 Reference quirks handled deliberately (SURVEY.md §8):
 * Q1: the reference's ``accept_with_count`` ignores its count argument; we
   implement true weighted insert (``accept_many`` with weights), which the
@@ -124,75 +129,56 @@ class DDSketch:
                          np.array([count], dtype=np.float64))
 
     def accept_many(self, values: np.ndarray, weights: np.ndarray | None = None) -> None:
-        """Vectorized build: route a whole array of values in one pass.
-
-        Semantics preserved from the reference accept (spec sketch.rs:38-56):
-        out-of-range magnitudes silently dropped; near-zero values land in the
-        exact zero bucket; non-positive weights dropped. Unlike the reference
-        (quirk Q1) the weight is honored.
-        """
+        """Vectorized build: drop rows whose weight is non-positive or NaN,
+        route the values (``route_batch``), insert the cells
+        (``apply_routed``). Unlike the reference (quirk Q1) the weight is
+        honored."""
         v = np.asarray(values, dtype=np.float64)
-        if weights is None:
-            w = np.ones(v.shape[0], dtype=np.float64)
-        else:
+        w = None
+        if weights is not None:
             w = np.asarray(weights, dtype=np.float64)
-
-        # Non-finite values are dropped along with out-of-range magnitudes.
-        # (Deviation from the reference, which keeps +-inf because its
-        # `inf > max_indexed_value` guard compares inf > inf: under the LOG
-        # mapping that is pathological — ln(inf) has no bucket — so we extend
-        # the documented "out-of-range values are silently dropped" rule,
-        # spec sketch.rs:43-45, to non-finite input.)
-        keep = (w > 0.0) & np.isfinite(v) & (np.abs(v) <= self.max_indexed_value)
-        v = v[keep]
-        w = w[keep]
-        if v.size == 0:
-            return
-
-        pos = v > self.min_indexed_value
-        neg = v < -self.min_indexed_value
-        zero = ~(pos | neg)
-
-        if pos.any():
-            idx = self.index_mapping.index_of(v[pos])
-            self.positive_value_store.add_many(idx, w[pos])
-        if neg.any():
-            idx = self.index_mapping.index_of(-v[neg])
-            self.negative_value_store.add_many(idx, w[neg])
-        zc = w[zero].sum()
-        if zc > 0.0:
-            self.zero_count += float(zc)
+            keep = w > 0.0
+            v, w = v[keep], w[keep]
+        self.apply_routed(*self.route_batch(v), w)
 
     def route_batch(self, values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """Vectorized routing for deferred builds: returns (side, idx) where
-        side is +1/-1/0 for positive-store/negative-store/zero-bucket and -2
-        for dropped values; idx is the bucket index (valid where side=+-1).
+        """The insert rule (spec sketch.rs:38-56), vectorized: returns
+        (side, idx) where side is +1/-1/0 for positive-store/negative-store/
+        zero-bucket and -2 for dropped values; idx is the bucket index (valid
+        where side=+-1).
+
+        Out-of-range magnitudes are dropped, and so are non-finite values.
+        (Deviation from the reference, which keeps +-inf because its
+        `inf > max_indexed_value` guard compares inf > inf: under the LOG
+        mapping that is pathological — ln(inf) has no bucket — so we extend
+        the documented "out-of-range values are silently dropped" rule,
+        spec sketch.rs:43-45, to non-finite input.)
 
         One log pass per batch; callers can slice the result per group and
         apply it later with ``apply_routed`` — the aggregation hot path.
         """
         v = np.asarray(values, dtype=np.float64)
-        side = np.full(v.shape[0], -2, dtype=np.int8)
-        ok = np.isfinite(v) & (np.abs(v) <= self.max_indexed_value)
-        side[ok & (v > self.min_indexed_value)] = 1
-        side[ok & (v < -self.min_indexed_value)] = -1
-        side[ok & (np.abs(v) <= self.min_indexed_value)] = 0
+        a = np.abs(v)
+        ok = np.isfinite(a) & (a <= self.max_indexed_value)
+        nz = ok & (a > self.min_indexed_value)
+        side = np.where(ok, np.int8(0), np.int8(-2))
+        side[nz] = np.where(v[nz] > 0.0, np.int8(1), np.int8(-1))
         idx = np.zeros(v.shape[0], dtype=np.int64)
-        nz = (side == 1) | (side == -1)
         if nz.any():
-            idx[nz] = self.index_mapping.index_of(np.abs(v[nz]))
+            idx[nz] = self.index_mapping.index_of(a[nz])
         return side, idx
 
-    def apply_routed(self, side: np.ndarray, idx: np.ndarray) -> None:
-        """Insert pre-routed (side, idx) pairs (weight 1 each)."""
-        pos = side == 1
-        if pos.any():
-            self.positive_value_store.add_many(idx[pos])
-        neg = side == -1
-        if neg.any():
-            self.negative_value_store.add_many(idx[neg])
-        zc = int((side == 0).sum())
-        if zc:
+    def apply_routed(self, side: np.ndarray, idx: np.ndarray,
+                     weights: np.ndarray | None = None) -> None:
+        """Insert routed (side, idx) cells, each with its weight (1 when
+        ``weights`` is None); side -2 cells are skipped."""
+        for s, store in ((1, self.positive_value_store), (-1, self.negative_value_store)):
+            m = side == s
+            if m.any():
+                store.add_many(idx[m], None if weights is None else weights[m])
+        zero = side == 0
+        zc = zero.sum() if weights is None else weights[zero].sum()
+        if zc > 0:
             self.zero_count += float(zc)
 
     # -- queries (spec sketch.rs:58-171) ---------------------------------------

@@ -489,12 +489,9 @@ SELECT g.lang, g.text FROM good g JOIN keep USING (doc_id))"""
 def salted_quantile_query(table: str, value_expr: str, groups: list[str],
                           quantiles: dict[str, float], alpha: float = ALPHA,
                           num_salts: int = 16):
-    """Grouped build with explicit deterministic salting
-    (ddsketch_aggregate_salted): the level-1 partial keys on (keys..., salt)
-    and level 2 merges the per-salt blobs on keys. Mergeability makes the
-    split lossless, so the SAME
-    unsalted quantile oracle pins it — the hard proof that salting does not
-    change results."""
+    """Grouped build through ddsketch_aggregate_salted, which is
+    ddsketch_aggregate (the map-side partial leaves a salt nothing to
+    spread), so the SAME unsalted quantile oracle pins it."""
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         from ..functions.ddsketch_spark import ddsketch_aggregate_salted
         df = load(spark, sf_dir, table).select(
@@ -1354,12 +1351,8 @@ def pages_host_quantile_query(quantiles: dict[str, float],
     partial_count aggregates on (host, side, idx) inside each task, so the
     hot host's rows collapse to at most ~max_bins histogram rows per task
     BEFORE the exchange — no reducer ever sees the hot host's raw rows.
-    Explicit salting (ddsketch_aggregate_salted, proven lossless on this
-    exact table in tests/test_pages.py and hash-pinned by
-    ddsketch_salted_textlen_by_lang) is the tool for the BLOB-UDAF path,
-    whose per-(group, partition) partials don't map-side-combine; salting
-    all ~1000 hosts through the pandas path costs ~14k tiny Python groups
-    and was measured 12x slower than this plan at sf-test scale."""
+    The blob path (ddsketch_aggregate) combines map-side too: its level-1
+    partial emits one blob per (group, scan partition)."""
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         from ..sources.pages import pages_table
         pages = pages_table(spark, num_rows)

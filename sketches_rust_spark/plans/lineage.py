@@ -8,7 +8,9 @@ be resumable from checkpoint with per-partition lineage + metrics. Design:
   snapshot is stable (with Iceberg this would key off the snapshot's file
   manifest; the parquet fallback uses the listed file set, and the manifest
   is persisted on the first run so a resume always uses the original
-  assignment).
+  assignment). ``run()`` and ``finalize()`` raise on a listed file the
+  manifest does not hold, since no shard would build it; deleting the
+  manifest re-shards, and a shard whose file list changed is built again.
 * Each shard's partial sketch blobs (keys..., sketch, rows_in) are written to
   ``checkpoint_dir/shards/shard=<id>/`` followed by a ``_SHARD_DONE`` marker
   containing lineage metrics (files, rows, wall ms, engine path). Writes are
@@ -34,13 +36,6 @@ from pyspark.sql import functions as F
 
 from ..functions.ddsketch_spark import SketchConfig, merge_partials
 from ..functions.ddsketch_sql import ddsketch_aggregate_sql
-
-_LOG_PRESETS = {
-    "logarithmic_collapsing_lowest_dense",
-    "logarithmic_collapsing_highest_dense",
-    "logarithmic_unbounded_size_dense_store",
-}
-
 
 class SketchCheckpointJob:
     def __init__(
@@ -81,19 +76,33 @@ class SketchCheckpointJob:
         if os.path.exists(mp):
             with open(mp) as f:
                 return {int(k): v for k, v in json.load(f)["shards"].items()}
+        shards: dict[int, list[str]] = {i: [] for i in range(self.num_shards)}
+        for i, f in enumerate(self._listed_files()):
+            shards[i % self.num_shards].append(f)
+        shards = {k: v for k, v in shards.items() if v}
+        with open(mp, "w") as f:
+            json.dump({"input": self.input_path, "shards": shards}, f, indent=1)
+        return shards
+
+    def _listed_files(self) -> list[str]:
         files = sorted(
             os.path.join(self.input_path, f)
             for f in os.listdir(self.input_path)
             if f.endswith(".parquet")
         )
-        if not files:  # single-file input
-            files = [self.input_path]
-        shards: dict[int, list[str]] = {i: [] for i in range(self.num_shards)}
-        for i, f in enumerate(files):
-            shards[i % self.num_shards].append(f)
-        shards = {k: v for k, v in shards.items() if v}
-        with open(mp, "w") as f:
-            json.dump({"input": self.input_path, "shards": shards}, f, indent=1)
+        return files or [self.input_path]  # single-file input
+
+    def _checked_assignment(self) -> dict[int, list[str]]:
+        """The persisted assignment, refusing to go on when the input lists
+        a file the manifest never assigned: no shard would build it, and
+        the final blobs would silently leave it out."""
+        shards = self.shard_assignment()
+        assigned = {f for files in shards.values() for f in files}
+        unassigned = [f for f in self._listed_files() if f not in assigned]
+        if unassigned:
+            raise ValueError(
+                f"input files not in the shard manifest {self._manifest_path()}: "
+                f"{unassigned}; delete the manifest to re-shard")
         return shards
 
     def _shard_dir(self, shard_id: int) -> str:
@@ -103,9 +112,15 @@ class SketchCheckpointJob:
         return os.path.join(self._shard_dir(shard_id), "_SHARD_DONE")
 
     def completed_shards(self) -> list[int]:
-        return sorted(
-            s for s in self.shard_assignment() if os.path.exists(self._marker(s))
-        )
+        """Shards whose marker records exactly the files the manifest assigns
+        them; a shard built under an older manifest is built again."""
+        done = []
+        for s, files in self.shard_assignment().items():
+            if os.path.exists(self._marker(s)):
+                with open(self._marker(s)) as f:
+                    if json.load(f)["files"] == files:
+                        done.append(s)
+        return sorted(done)
 
     # -- level 1: per-shard partials -------------------------------------------
 
@@ -138,10 +153,11 @@ class SketchCheckpointJob:
     def run(self, resume: bool = True, fail_after_shards: int | None = None) -> list[dict]:
         """Process shards, skipping completed ones when resuming.
         ``fail_after_shards`` injects a crash after N shards (for tests)."""
+        shards = self._checked_assignment()
         done = set(self.completed_shards()) if resume else set()
         metrics = []
         processed = 0
-        for shard_id, files in sorted(self.shard_assignment().items()):
+        for shard_id, files in sorted(shards.items()):
             if shard_id in done:
                 continue
             metrics.append(self._build_shard(shard_id, files))
@@ -155,12 +171,12 @@ class SketchCheckpointJob:
     def finalize(self) -> DataFrame:
         """Merge all shard partials into final per-group blobs (no input
         re-scan) and write them under checkpoint_dir/final."""
-        missing = set(self.shard_assignment()) - set(self.completed_shards())
+        shards = sorted(self._checked_assignment())
+        missing = set(shards) - set(self.completed_shards())
         if missing:
             raise RuntimeError(f"cannot finalize: shards not complete: {sorted(missing)}")
         partials = self.spark.read.parquet(
-            os.path.join(self.checkpoint_dir, "shards", "*", "partials")
-        )
+            *(os.path.join(self._shard_dir(s), "partials") for s in shards))
         final = merge_partials(partials, self.keys, self.config)
         final.write.mode("overwrite").parquet(os.path.join(self.checkpoint_dir, "final"))
         return self.spark.read.parquet(os.path.join(self.checkpoint_dir, "final"))

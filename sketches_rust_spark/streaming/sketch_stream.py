@@ -19,7 +19,11 @@ the batch two-level plan exact):
    stateful operator via ``applyInPandasWithState`` — per-key state IS the
    serialized sketch blob; every batch decodes-merges-encodes and emits the
    running quantile estimates. Demonstrates sketch-as-streaming-state; the
-   state size is the blob size (KBs), not the data size.
+   state size is the blob size (KBs), not the data size. ``_load_state``
+   is the one place state becomes a sketch.
+
+The watermarked ``windowed_sketch_histogram`` is the batch
+``ddsketch_histogram`` with a window key, so both build the same cells.
 """
 
 from __future__ import annotations
@@ -44,7 +48,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions.ddsketch_spark import SketchConfig, merge_partials
-from ..functions.ddsketch_sql import ddsketch_aggregate_sql
+from ..functions.ddsketch_sql import ddsketch_aggregate_sql, ddsketch_histogram
 from ..kernel.sketch import DDSketch
 
 
@@ -64,11 +68,7 @@ def stream_state_partitions(staged_dir: str, n_batches: int) -> int:
     Sizing rule: one partition per ~64 MB of per-micro-batch input, floor 4
     (parallelism for the non-stateful stages), no ceiling (a production
     stream with GB-scale micro-batches derives a proportionally larger state
-    store). Override with $SKETCH_STREAM_SHUFFLE_PARTITIONS for deployments
-    where key cardinality, not bytes, should size the state store."""
-    env = os.environ.get("SKETCH_STREAM_SHUFFLE_PARTITIONS")
-    if env:
-        return max(1, int(env))
+    store)."""
     total = 0
     for root, _dirs, files in os.walk(staged_dir):
         for f in files:
@@ -148,6 +148,17 @@ def merged_stream_result(spark: SparkSession, sink_dir: str,
     return merge_partials(partials, keys, config)
 
 
+def _load_state(state: GroupState, config: SketchConfig) -> DDSketch:
+    """The key's running sketch from its state blob; empty when there is
+    none (an empty sketch reports count 0.0 and estimate None)."""
+    sk = config.new()
+    if state.exists:
+        (blob,) = state.get
+        if blob is not None:
+            sk.decode_and_merge_with(bytes(blob))
+    return sk
+
+
 def stateful_sketch_stream(
     stream_df: DataFrame,
     value_col: str,
@@ -169,11 +180,7 @@ def stateful_sketch_stream(
 
     def update(key_tuple, pdf_iter, state: GroupState):
         import numpy as np
-        sk = config.new()
-        if state.exists:
-            (blob,) = state.get
-            if blob is not None:
-                sk.decode_and_merge_with(bytes(blob))
+        sk = _load_state(state, config)
         for pdf in pdf_iter:
             sk.accept_many(pdf[value_col].to_numpy(np.float64, na_value=np.nan))
         blob = sk.encode()
@@ -305,24 +312,14 @@ def _eviction_update(value_col: str, config: SketchConfig, quantile: float,
         import numpy as np
         if state.hasTimedOut:
             # idle past the timeout: emit a final marker and drop the state
-            count, est = 0.0, None
-            if state.exists:
-                (blob,) = state.get
-                if blob is not None:
-                    sk = config.new()
-                    sk.decode_and_merge_with(bytes(blob))
-                    count, est = sk.get_count(), sk.get_value_at_quantile(quantile)
+            sk = _load_state(state, config)
             state.remove()
             yield pd.DataFrame([{
-                "key": key_tuple[0], "count": count,
-                "estimate": est, "evicted": True,
+                "key": key_tuple[0], "count": sk.get_count(),
+                "estimate": sk.get_value_at_quantile(quantile), "evicted": True,
             }])
             return
-        sk = config.new()
-        if state.exists:
-            (blob,) = state.get
-            if blob is not None:
-                sk.decode_and_merge_with(bytes(blob))
+        sk = _load_state(state, config)
         batch_max_ts = None
         for pdf in pdf_iter:
             sk.accept_many(pdf[value_col].to_numpy(np.float64, na_value=np.nan))
@@ -353,26 +350,9 @@ def windowed_sketch_histogram(
     weight_col: str | None = None,
 ) -> DataFrame:
     """Watermarked tumbling-window sketch histogram — the fully-native
-    streaming aggregation: groupBy(window, keys, side, idx).count() runs in
-    the state store with late-data handling from the watermark; downstream
-    consumers assemble blobs or walk quantiles exactly as in batch.
-    weight_col: weighted inserts (sum(weight) per bucket, same guards as
-    the batch path)."""
-    from ..functions.ddsketch_sql import bucket_columns, value_guard
-
-    keys = list(keys)
-    v = F.col(value_col)
-    side, idx = bucket_columns(v, config)
-    filtered = (stream_df
-                .withWatermark(ts_col, watermark)
-                .where(value_guard(v, config)))
-    if weight_col is None:
-        c = F.count(F.lit(1)).cast("double")
-    else:
-        w = F.col(weight_col).cast("double")
-        filtered = filtered.where(w.isNotNull() & ~F.isnan(w) & (w > 0))
-        c = F.sum(w)
-    return (filtered
-            .groupBy(F.window(ts_col, window_duration), *keys,
-                     side.alias("side"), idx.alias("idx"))
-            .agg(c.alias("c")))
+    streaming aggregation: ``ddsketch_histogram`` keyed on (window, keys...)
+    runs in the state store with late-data handling from the watermark;
+    downstream consumers assemble blobs or walk quantiles exactly as in
+    batch. weight_col: weighted inserts (sum(weight) per bucket)."""
+    return ddsketch_histogram(stream_df.withWatermark(ts_col, watermark), value_col,
+                              [F.window(ts_col, window_duration), *keys], config, weight_col)

@@ -86,6 +86,41 @@ def test_shard_assignment_stable_across_listing_changes(spark, tmp_path, sharded
         os.remove(extra)
 
 
+def test_file_appended_after_run_is_refused_until_reshard(spark, tmp_path, sharded_input):
+    """A file landing after the manifest was written belongs to no shard:
+    run() and finalize() refuse it rather than return blobs that leave it
+    out. Deleting the manifest re-shards, and the shard whose file list grew
+    is built again, so the final blobs cover every file."""
+    ckpt = str(tmp_path / "ckpt_append")
+    job = SketchCheckpointJob(spark, sharded_input, "length(text)", ["lang"],
+                              CFG, ckpt, num_shards=4)
+    job.run()
+    job.finalize()
+
+    extra = os.path.join(sharded_input, "zzz-extra.parquet")
+    spark.read.parquet(sharded_input).limit(40).coalesce(1).write.parquet(
+        str(tmp_path / "extra"))
+    os.rename(glob.glob(str(tmp_path / "extra") + "/*.parquet")[0], extra)
+    with pytest.raises(ValueError, match="zzz-extra.parquet"):
+        job.run()
+    with pytest.raises(ValueError, match="zzz-extra.parquet"):
+        job.finalize()
+
+    df = spark.read.parquet(sharded_input).select(
+        "lang", F.expr("length(text)").cast("double").alias("_v"))
+    want = {r["lang"]: bytes(r["sketch"])
+            for r in ddsketch_aggregate_sql(df, "_v", ["lang"], CFG).collect()}
+    # 7 files over 4 shards: only shard 2 gains a file and is built again;
+    # over 3 shards every file list changes and shard=3 is left over
+    for num_shards, rebuilt in ((4, [2]), (3, [0, 1, 2])):
+        os.remove(os.path.join(ckpt, "manifest.json"))
+        job = SketchCheckpointJob(spark, sharded_input, "length(text)", ["lang"],
+                                  CFG, ckpt, num_shards=num_shards)
+        assert [m["shard"] for m in job.run()] == rebuilt
+        got = {r["lang"]: bytes(r["sketch"]) for r in job.finalize().collect()}
+        assert got == want
+
+
 def test_sketch_job_cli_entrypoint_runs_and_resumes(
         spark, tmp_path, sharded_input, capsys, monkeypatch):
     """The spark-submit entrypoint (jobs/sketch_job.py) end-to-end in the

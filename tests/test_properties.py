@@ -72,6 +72,84 @@ def test_merge_order_invariance(vals, split):
     assert merged.encode() == whole.encode()
 
 
+# ---------------------------------------------------------------------------
+# the insert rule: accept_many is route_batch + apply_routed, for every preset
+# ---------------------------------------------------------------------------
+
+_EDGE_VALUES = [0.0, -0.0, float("nan"), float("inf"), float("-inf"), 1.7e308,
+                -1.7e308, 5e-324, -5e-324, 2.2e-308, 1e-310]
+adversarial_value = st.one_of(st.floats(allow_nan=True, allow_infinity=True),
+                              st.sampled_from(_EDGE_VALUES))
+adversarial_weight = st.one_of(st.floats(min_value=-2.0, max_value=5.0),
+                               st.sampled_from([0.0, -0.0, -1.0, float("nan")]))
+
+
+@settings(max_examples=100, deadline=None)
+@given(st.lists(st.tuples(adversarial_value, adversarial_weight), max_size=200),
+       st.sampled_from(DDSketch.PRESETS),
+       st.sampled_from([0.005, 0.02, 0.05]),
+       st.sampled_from([8, 64, 2048]))
+def test_accept_many_is_route_then_apply(rows, preset, alpha, bins):
+    v = np.array([r[0] for r in rows], dtype=np.float64)
+    w = np.array([r[1] for r in rows], dtype=np.float64)
+
+    def new():
+        return DDSketch.preset(preset, alpha, bins)
+
+    direct, routed = new(), new()
+    direct.accept_many(v)
+    routed.apply_routed(*routed.route_batch(v))
+    assert direct.encode() == routed.encode()
+
+    direct, routed = new(), new()
+    direct.accept_many(v, w)
+    keep = w > 0.0
+    routed.apply_routed(*routed.route_batch(v[keep]), w[keep])
+    assert direct.encode() == routed.encode()
+
+
+def _pin_input():
+    rng = np.random.default_rng(20261017)
+    special = np.array([0.0, -0.0, np.nan, np.inf, -np.inf, 1.7e308, -1.7e308,
+                        5e-324, -5e-324, 2.2e-308, 1e-310, 1.0, -1.0])
+    v = np.concatenate([rng.lognormal(0.0, 6.0, 600),
+                        -rng.lognormal(2.0, 3.0, 300),
+                        rng.normal(0.0, 1e-309, 20),
+                        special])
+    w = rng.uniform(0.05, 4.0, v.shape[0])
+    w[::17] = 0.0
+    w[5::23] = -1.5
+    w[11::29] = np.nan
+    return v, w
+
+
+# sha256 of accept_many(v, w) blobs on _pin_input() at alpha 0.02, 64 bins
+# (every collapsing preset collapses on this input)
+_WEIGHTED_BUILD_PINS = {
+    "collapsing_lowest_dense":
+        "b39c5283f5396c82776fd7c36d82ddd863acbaa27421b1240e77d95d4cfa89c0",
+    "collapsing_highest_dense":
+        "e6badb55dd65980d4295a1e7d14158d3996dc712bc9c57113054dcb5a9e38f99",
+    "unbounded_dense":
+        "b1891a1cbda49f6b51b1a22fc4d466dbaf977d908dc99414ac68ec9446129ea5",
+    "logarithmic_collapsing_lowest_dense":
+        "e55258bae971f15bcc17ac80acee0495e94d17ce8da26a73b430b7e72d792dcf",
+    "logarithmic_collapsing_highest_dense":
+        "5722e755b9daef39c458282a290509e7e1e8daf4f44602004bec0a62c61acd20",
+    "logarithmic_unbounded_size_dense_store":
+        "e0429eada787f8e6679015ad1df20f839294fbd1f37e4b9717a21fecb75a9090",
+}
+
+
+@pytest.mark.parametrize("preset", DDSketch.PRESETS)
+def test_weighted_accept_many_bytes_pinned(preset):
+    import hashlib
+
+    sk = DDSketch.preset(preset, 0.02, 64)
+    sk.accept_many(*_pin_input())
+    assert hashlib.sha256(sk.encode()).hexdigest() == _WEIGHTED_BUILD_PINS[preset]
+
+
 @settings(max_examples=30, deadline=None)
 @given(st.text(alphabet=st.characters(min_codepoint=32, max_codepoint=126),
                min_size=0, max_size=60),
