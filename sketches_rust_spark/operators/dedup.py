@@ -19,21 +19,30 @@ hex chars of md5 parsed as int (identical in Spark and DuckDB); MinHash
 permutations apply SplitMix64(base XOR seed_i) — integer-exact in both
 engines (see functions/sibling_oracle.splitmix64_sql), so LSH buckets and
 candidate pairs admit exact oracles.
+
+Each rule the oracles replay has one owner: the Manku blocked simhash join
+and its combo-key layout (``_simhash_blocked_join``), the shingle
+doc-frequency cap (``_cap_doc_freq``) and the gated driver union-find solve
+of near_dup_clusters (``_driver_components``).
 """
 
 from __future__ import annotations
 
 import hashlib
+import itertools
+import operator
 import os
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
+    IntegralType,
     LongType,
+    StringType,
     StructField,
     StructType,
 )
@@ -232,6 +241,16 @@ def minhash_jaccard_estimate(signatures: DataFrame, pairs: DataFrame) -> DataFra
 
 # -- exact n-gram Jaccard ---------------------------------------------------------------
 
+def _cap_doc_freq(sh: DataFrame, max_df: int | None) -> DataFrame:
+    """Drop (_id, h) rows whose shingle h is in more than max_df documents
+    (None = no cap): a window count over h is ONE shuffle keyed by h (which
+    a shingle join needs anyway) — no second explosion or anti-join scan."""
+    if max_df is None:
+        return sh
+    dfreq = F.count(F.lit(1)).over(Window.partitionBy("h"))
+    return sh.withColumn("_df", dfreq).where(F.col("_df") <= max_df).drop("_df")
+
+
 def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
                         text_col: str = "text", shingle_k: int = 3,
                         threshold: float = 0.5,
@@ -255,18 +274,9 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     materialize: localCheckpoint the (possibly df-capped) shingle table
     before its three uses below (sizes + both self-join sides) — without it
     each use re-derives the explode+distinct pipeline."""
-    sh = (shingles if shingles is not None
-          else shingle_hashes(df, id_col, text_col, shingle_k))
-    if max_shingle_df is not None:
-        # annotate each (doc, shingle) row with the shingle's doc frequency
-        # via a window over h: ONE shuffle keyed by h (which the self-join
-        # needs anyway) and one pass — no second shingle explosion or
-        # anti-join scan
-        from pyspark.sql import Window
-        dfreq = F.count(F.lit(1)).over(Window.partitionBy("h"))
-        sh = (sh.withColumn("_df", dfreq)
-              .where(F.col("_df") <= max_shingle_df)
-              .drop("_df"))
+    sh = _cap_doc_freq(shingles if shingles is not None
+                       else shingle_hashes(df, id_col, text_col, shingle_k),
+                       max_shingle_df)
     if materialize:
         sh = sh.localCheckpoint()
     sizes = sh.groupBy("_id").agg(F.count(F.lit(1)).alias("n"))
@@ -311,12 +321,8 @@ def contamination_pairs(corpus: DataFrame, evalset: DataFrame,
     # exchange in the whole plan carries matched (doc, item) partial counts.
     c_sh = shingle_hashes(corpus, corpus_id, text_col, shingle_k
                           ).withColumnRenamed("_id", "doc_id")
-    e_sh = shingle_hashes(evalset, eval_id, text_col, shingle_k)
-    if max_eval_df is not None:
-        from pyspark.sql import Window
-        dfreq = F.count(F.lit(1)).over(Window.partitionBy("h"))
-        e_sh = (e_sh.withColumn("_df", dfreq)
-                .where(F.col("_df") <= max_eval_df).drop("_df"))
+    e_sh = _cap_doc_freq(shingle_hashes(evalset, eval_id, text_col, shingle_k),
+                         max_eval_df)
     joined = c_sh.join(
         F.broadcast(e_sh.withColumnRenamed("_id", "item_id")), "h")
     return (joined.groupBy("doc_id", "item_id")
@@ -441,21 +447,18 @@ def simhash_candidates(signatures: DataFrame, max_hamming: int = 3,
     # keep_canonical 5.83 s vs 6.88 s in favor of the checkpoint — and at
     # scale it halves the dominant CPU cost (one signature pass, not two).
     signatures = signatures.localCheckpoint()
-    keyed, packable = _simhash_combo_keyed(signatures, max_hamming, n_blocks)
-    a, b = keyed.alias("a"), keyed.alias("b")
-    same_key = (F.col("a.v") == F.col("b.v")) if packable else (
-        (F.col("a.q") == F.col("b.q")) & (F.col("a.v") == F.col("b.v")))
-    return (a.join(b, same_key & (F.col("a._id") < F.col("b._id")))
-            .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"),
-                    F.col("a.simhash").alias("sh_a"), F.col("b.simhash").alias("sh_b"))
-            .distinct())
+    return _simhash_blocked_join(signatures, signatures, max_hamming,
+                                 n_blocks, operator.lt).distinct()
 
 
-def _simhash_combo_keyed(signatures: DataFrame, max_hamming: int,
-                         n_blocks: int | None) -> tuple[DataFrame, bool]:
-    """(_id, simhash, q, v): one row per Manku combo key per signature.
-    Shared by the self-join (simhash_candidates) and the incremental
-    shard-vs-persisted-corpus join (incremental_simhash_filter)."""
+def _simhash_blocked_join(left: DataFrame, right: DataFrame,
+                          max_hamming: int, n_blocks: int | None,
+                          ids_match) -> DataFrame:
+    """(id_a, id_b, sh_a, sh_b) for every pair of (_id, simhash) rows of
+    left x right whose ids satisfy ``ids_match`` and that agree exactly on
+    some combination of (n_blocks - max_hamming) blocks — once per such
+    combination, with no Hamming filter (see simhash_near_pairs for why it
+    is lossless). The only code that knows the combo-key layout."""
     if not 0 <= max_hamming <= 63:
         raise ValueError(f"max_hamming must be in [0, 63], got {max_hamming}")
     if n_blocks is None:
@@ -463,7 +466,6 @@ def _simhash_combo_keyed(signatures: DataFrame, max_hamming: int,
     if not max_hamming + 1 <= n_blocks <= 64:
         raise ValueError(
             f"n_blocks must be in [max_hamming + 1, 64], got {n_blocks}")
-    import itertools
 
     widths = [64 // n_blocks + (1 if i < 64 % n_blocks else 0)
               for i in range(n_blocks)]
@@ -500,14 +502,20 @@ def _simhash_combo_keyed(signatures: DataFrame, max_hamming: int,
             return blocks[combo[0]]
         return F.array(*[blocks[b] for b in combo])
 
-    keyed = signatures.select(
-        "_id", "simhash",
-        F.explode(F.array(*[
-            F.struct(F.lit(ci).alias("q"), combo_key(ci, combo).alias("v"))
-            for ci, combo in enumerate(combos)
-        ])).alias("qv"),
-    ).select("_id", "simhash", F.col("qv.q").alias("q"), F.col("qv.v").alias("v"))
-    return keyed, packable
+    # each side as (_id, simhash, q, v): one row per combo key per signature
+    qv = F.explode(F.array(*[
+        F.struct(F.lit(ci).alias("q"), combo_key(ci, combo).alias("v"))
+        for ci, combo in enumerate(combos)
+    ])).alias("qv")
+    a, b = (sigs.select("_id", "simhash", qv)
+            .select("_id", "simhash", "qv.q", "qv.v").alias(name)
+            for sigs, name in ((left, "a"), (right, "b")))
+    same_key = (F.col("a.v") == F.col("b.v")) if packable else (
+        (F.col("a.q") == F.col("b.q")) & (F.col("a.v") == F.col("b.v")))
+    return (a.join(b, same_key & ids_match(F.col("a._id"), F.col("b._id")))
+            .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"),
+                    F.col("a.simhash").alias("sh_a"),
+                    F.col("b.simhash").alias("sh_b")))
 
 
 def incremental_simhash_filter(new_docs: DataFrame, sig_table: DataFrame,
@@ -526,15 +534,11 @@ def incremental_simhash_filter(new_docs: DataFrame, sig_table: DataFrame,
     Manku combo keys, so the join is bucket-local exactly like the batch
     self-join; pigeonhole keeps it lossless."""
     new_sigs = simhash_signatures(new_docs, id_col=id_col, text_col=text_col)
-    ka, packable = _simhash_combo_keyed(new_sigs, max_hamming, n_blocks)
-    kb, _ = _simhash_combo_keyed(sig_table, max_hamming, n_blocks)
-    a, b = ka.alias("a"), kb.alias("b")
-    same_key = (F.col("a.v") == F.col("b.v")) if packable else (
-        (F.col("a.q") == F.col("b.q")) & (F.col("a.v") == F.col("b.v")))
-    hamming = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-    dup_ids = (a.join(b, same_key & (F.col("a._id") != F.col("b._id")))
+    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+    dup_ids = (_simhash_blocked_join(new_sigs, sig_table, max_hamming,
+                                     n_blocks, operator.ne)
                .where(hamming <= max_hamming)
-               .select(F.col("a._id").alias(id_col)).distinct())
+               .select(F.col("id_a").alias(id_col)).distinct())
     # survivors come from the SIGNATURE set (not new_docs): a doc with no
     # tokens gets no signature and is out of scope on both engine and
     # oracle sides — basing survivors on new_docs would let such a doc
@@ -573,14 +577,10 @@ def _simhash_sig_pairs(sigs: DataFrame, max_hamming: int,
     connected-components path of keep-canonical dedup (which clusters the
     signature graph directly)."""
     usig = (sigs.select(F.col("simhash").alias("_id"), "simhash").distinct())
-    keyed, packable = _simhash_combo_keyed(usig, max_hamming, n_blocks)
-    a, b = keyed.alias("a"), keyed.alias("b")
-    same_key = (F.col("a.v") == F.col("b.v")) if packable else (
-        (F.col("a.q") == F.col("b.q")) & (F.col("a.v") == F.col("b.v")))
     sig_hamming = F.bit_count(F.col("_sga").bitwiseXOR(F.col("_sgb")))
-    return (a.join(b, same_key & (F.col("a._id") < F.col("b._id")))
-            .select(F.col("a._id").alias("_sga"),
-                    F.col("b._id").alias("_sgb"))
+    return (_simhash_blocked_join(usig, usig, max_hamming, n_blocks,
+                                  operator.lt)
+            .select(F.col("id_a").alias("_sga"), F.col("id_b").alias("_sgb"))
             .distinct()
             .withColumn("hamming", sig_hamming)
             .where(F.col("hamming") <= max_hamming))
@@ -668,6 +668,27 @@ def _local_union_find(pdf: pd.DataFrame) -> list[tuple]:
     return [(x, find(x)) for x in parent]
 
 
+def _driver_components(edges: DataFrame, n_edges: int,
+                       stats: dict | None) -> DataFrame | None:
+    """Both gates of near_dup_clusters: (_id, cluster) of the n_edges
+    (src, dst) edges solved by driver union-find, or None when the gate
+    misses. It needs SKETCH_CC_LOCAL_EDGE_CAP > 0, n_edges within it and an
+    integral or binary string id: Python's order and equality agree with
+    Spark's only there (Spark ranks NaN above every number and joins NaN to
+    NaN; Python does not)."""
+    cap = int(os.environ.get("SKETCH_CC_LOCAL_EDGE_CAP", "500000"))
+    id_t = edges.schema["src"].dataType
+    if not (cap > 0 and n_edges <= cap
+            and (isinstance(id_t, IntegralType) or id_t == StringType())):
+        return None
+    sol = _local_union_find(edges.toPandas())
+    if stats is not None:
+        stats["local_solve"] = True
+    schema = StructType([StructField("_id", id_t, False),
+                         StructField("cluster", id_t, False)])
+    return edges.sparkSession.createDataFrame(sol, schema)
+
+
 def near_dup_clusters(pairs: DataFrame, max_iters: int = 20,
                       stats: dict | None = None) -> DataFrame:
     """Connected components over near-dup pairs: (_id, cluster) where
@@ -695,14 +716,16 @@ def near_dup_clusters(pairs: DataFrame, max_iters: int = 20,
     default 500k ~= 8 MB of (long, long) rows — broadcast-relation
     territory), the components are solved exactly on the driver with
     union-find instead of the shuffle machinery — the same measured-size
-    strategy choice a broadcast join makes, NOT a local-mode tune. Two
-    gates: (1) on the INPUT edge count (one scan of the persisted edge set,
-    which the contraction would materialize anyway) — a hit skips
-    contraction AND loop outright; (2) after contraction, on the CONTRACTED
-    edge count (covers huge inputs whose clique-heavy remainder is tiny).
-    Both counts move no rows to the driver when the graph is big; at real
-    scale both gates miss and the distributed path below runs unchanged.
-    All paths are exact, so the result is identical.
+    strategy choice a broadcast join makes, NOT a local-mode tune. One
+    helper, ``_driver_components``, gates twice: (1) on the INPUT edge count
+    (one scan of the persisted edge set, which the contraction would
+    materialize anyway) — a hit skips contraction AND loop outright; (2)
+    after contraction, on the CONTRACTED edge count (covers huge inputs
+    whose clique-heavy remainder is tiny). Both counts move no rows to the
+    driver when the graph is big; at real scale both gates miss and the
+    distributed path below runs unchanged. Only integral or string ids take
+    the driver path (Python's float order and NaN equality differ from
+    Spark's). All paths are exact, so the result is identical.
 
     Stops early at fixpoint; raises on non-convergence rather than silently
     splitting components (dedup_keep_canonical would retain duplicates) —
@@ -710,7 +733,8 @@ def near_dup_clusters(pairs: DataFrame, max_iters: int = 20,
     regardless of max_iters).
 
     stats: optional dict filled with {'input_edges', 'contracted_edges',
-    'rounds', 'changed_per_round'} — extra count() actions, so pass it only
+    'rounds', 'changed_per_round'}, plus 'local_solve': True when a gate
+    solved on the driver — extra count() actions, so pass it only
     when instrumenting (adversarial-skew evidence lives in
     tests/test_pipeline_ops.py, scripts/cc_scale_point.py and
     BENCH/BASELINE.md)."""
@@ -727,25 +751,18 @@ def near_dup_clusters(pairs: DataFrame, max_iters: int = 20,
     edges = (pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
              .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
              ).persist(StorageLevel.MEMORY_AND_DISK)  # blocked join runs ONCE
-    cap = int(os.environ.get("SKETCH_CC_LOCAL_EDGE_CAP", "500000"))
-    if cap > 0:
-        # early gate on the INPUT graph: counting the persisted edge set
-        # costs one cache scan (the contraction's groupBy would materialize
-        # the same persist anyway), and when the whole pair graph fits the
-        # local cap the contraction + loop machinery is skipped outright
-        n_edges = edges.count()
-        if stats is not None:
-            stats["input_edges"] = n_edges
-        if n_edges <= cap:
-            sol = _local_union_find(edges.toPandas())
-            edges.unpersist()
-            if stats is not None:
-                stats.update({"contracted_edges": None, "rounds": 0,
-                              "changed_per_round": [], "local_solve": True})
-            id_t = edges.schema["src"].dataType
-            schema = StructType([StructField("_id", id_t, False),
-                                 StructField("cluster", id_t, False)])
-            return pairs.sparkSession.createDataFrame(sol, schema)
+    # gate 1, on the INPUT graph: counting the persisted edge set costs one
+    # cache scan (the contraction's groupBy would materialize the same
+    # persist anyway), and when the whole pair graph fits the local cap the
+    # contraction + loop machinery is skipped outright
+    n_edges = edges.count()
+    if stats is not None:
+        stats.update({"input_edges": n_edges, "contracted_edges": None,
+                      "rounds": 0, "changed_per_round": []})
+    labels = _driver_components(edges, n_edges, stats)
+    if labels is not None:
+        edges.unpersist()
+        return labels
     # phase 1: contract v -> min(closed neighborhood); every node appears as
     # src (edges are bidirectional), so m covers every node exactly once
     m = (edges.groupBy("src").agg(F.min("dst").alias("_mn"))
@@ -758,78 +775,60 @@ def near_dup_clusters(pairs: DataFrame, max_iters: int = 20,
           .select(F.col("_ts").alias("src"), F.col("_td").alias("dst"))
           .where(F.col("src") != F.col("dst"))
           .distinct()).localCheckpoint()
-    if stats is not None:
-        if "input_edges" not in stats:
-            stats["input_edges"] = edges.count()
-        stats["contracted_edges"] = e2.count()
-        stats["rounds"] = 0
-        stats["changed_per_round"] = []
     # m and e2 are materialized (eager checkpoints) and nothing below reads
     # the raw edges again — release the data-scale blocks NOW, not at GC
     edges.unpersist()
-    # phase 2a: size-gated exact local solve of the CONTRACTED graph (see
-    # docstring; covers input > cap but contracted remainder <= cap). The
-    # gate is a count() of the already-checkpointed contracted edges (a
-    # metadata-cheap job — no row ever reaches the driver when the graph is
-    # big), and the fetch when it fits is one Arrow toPandas.
-    if cap > 0:
-        n_e2 = (stats["contracted_edges"] if stats is not None
-                else e2.count())
-        if n_e2 <= cap:
-            sol = _local_union_find(e2.toPandas())
+    # gate 2, on the CONTRACTED graph (covers input > cap but contracted
+    # remainder <= cap): counting the checkpointed e2 is a metadata-cheap job
+    n_e2 = e2.count()
+    if stats is not None:
+        stats["contracted_edges"] = n_e2
+    labels = _driver_components(e2, n_e2, stats)
+    if labels is None:  # phase 2b: pointer-jumping min-label loop
+        labels = (e2.select(F.col("src").alias("_id")).distinct()
+                  .withColumn("cluster", F.col("_id"))).localCheckpoint()
+        changed = labels.count()  # nonzero iff any contracted edges remain
+        # scale-adaptive loop parallelism: every round's joins/aggregates touch
+        # only the CONTRACTED graph, whose node count we just measured — size
+        # the loop's partitioning from it (~1M nodes/partition) instead of
+        # inheriting the scan-sized session shuffle partitioning. On a
+        # clique-heavy near-dup graph the contracted remainder is tiny (3.7k
+        # edges at sf0.1) and the loop's cost is per-round fixed overhead:
+        # measured 6.9 s -> ~4 s for the full clusters build with this coalesce.
+        # At web scale (10^9+ contracted nodes) the derived count grows
+        # proportionally, so no round is ever single-task when the data is big.
+        loop_parts = max(1, -(-changed // 1_000_000))
+        if loop_parts < e2.rdd.getNumPartitions():
+            e2 = e2.coalesce(loop_parts)
+        labels = labels.coalesce(loop_parts)
+        for _ in range(max_iters):
+            if changed == 0:
+                break
             if stats is not None:
-                stats["local_solve"] = True
-            id_t = e2.schema["src"].dataType
-            schema = StructType([StructField("_rep2", id_t, False),
-                                 StructField("_fc", id_t, False)])
-            final = pairs.sparkSession.createDataFrame(sol, schema)
-            return (m.join(final, m.rep == final._rep2, "left")
-                    .select("_id", F.coalesce("_fc", "rep").alias("cluster")))
-    # phase 2b: pointer-jumping min-label loop over the contracted graph
-    labels = (e2.select(F.col("src").alias("_id")).distinct()
-              .withColumn("cluster", F.col("_id"))).localCheckpoint()
-    changed = labels.count()  # nonzero iff any contracted edges remain
-    # scale-adaptive loop parallelism: every round's joins/aggregates touch
-    # only the CONTRACTED graph, whose node count we just measured — size
-    # the loop's partitioning from it (~1M nodes/partition) instead of
-    # inheriting the scan-sized session shuffle partitioning. On a
-    # clique-heavy near-dup graph the contracted remainder is tiny (3.7k
-    # edges at sf0.1) and the loop's cost is per-round fixed overhead:
-    # measured 6.9 s -> ~4 s for the full clusters build with this coalesce.
-    # At web scale (10^9+ contracted nodes) the derived count grows
-    # proportionally, so no round is ever single-task when the data is big.
-    loop_parts = max(1, -(-changed // 1_000_000))
-    if loop_parts < e2.rdd.getNumPartitions():
-        e2 = e2.coalesce(loop_parts)
-    labels = labels.coalesce(loop_parts)
-    for _ in range(max_iters):
-        if changed == 0:
-            break
-        if stats is not None:
-            stats["rounds"] += 1
-        nmin = (e2.join(labels, e2.dst == labels._id)
-                .groupBy("src").agg(F.min("cluster").alias("nmin")))
-        jump = labels.select(F.col("_id").alias("_jid"),
-                             F.col("cluster").alias("_jc"))
-        new_labels = (labels.join(nmin, labels._id == nmin.src, "left")
-                      .join(jump, labels.cluster == jump._jid, "left")
-                      .select(labels._id,
-                              F.least("cluster", "nmin", "_jc").alias("cluster"),
-                              (F.least("nmin", "_jc") < F.col("cluster")
-                               ).alias("_chg"))
-                      ).coalesce(loop_parts).localCheckpoint()
-        changed = new_labels.where(F.col("_chg")).count()
-        if stats is not None:
-            stats["changed_per_round"].append(changed)
-        labels.unpersist()
-        labels = new_labels.drop("_chg")
-    if changed != 0:
-        raise RuntimeError(
-            f"near_dup_clusters did not converge within max_iters="
-            f"{max_iters} (labels still changing); the component "
-            f"diameter exceeds the cap — raise max_iters")
+                stats["rounds"] += 1
+            nmin = (e2.join(labels, e2.dst == labels._id)
+                    .groupBy("src").agg(F.min("cluster").alias("nmin")))
+            jump = labels.select(F.col("_id").alias("_jid"),
+                                 F.col("cluster").alias("_jc"))
+            new_labels = (labels.join(nmin, labels._id == nmin.src, "left")
+                          .join(jump, labels.cluster == jump._jid, "left")
+                          .select(labels._id,
+                                  F.least("cluster", "nmin", "_jc").alias("cluster"),
+                                  (F.least("nmin", "_jc") < F.col("cluster")
+                                   ).alias("_chg"))
+                          ).coalesce(loop_parts).localCheckpoint()
+            changed = new_labels.where(F.col("_chg")).count()
+            if stats is not None:
+                stats["changed_per_round"].append(changed)
+            labels.unpersist()
+            labels = new_labels.drop("_chg")
+        if changed != 0:
+            raise RuntimeError(
+                f"near_dup_clusters did not converge within max_iters="
+                f"{max_iters} (labels still changing); the component "
+                f"diameter exceeds the cap — raise max_iters")
     # compose: original node -> contraction rep -> final label (isolated
-    # reps — clique minima — are absent from the loop; they label themselves)
+    # reps — clique minima — are absent from e2; they label themselves)
     final = labels.select(F.col("_id").alias("_rep2"),
                           F.col("cluster").alias("_fc"))
     return (m.join(final, m.rep == final._rep2, "left")

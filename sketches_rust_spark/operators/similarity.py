@@ -12,6 +12,11 @@
 Float caveat: cosine sums are order-sensitive at the last ulp; scores are
 rounded to 6 digits and ties broken by vec_id, which makes top-k stable and
 exactly cross-engine comparable on the fixed test data.
+
+Each rule the oracles replay has one owner: the rounded cosine score
+(``_cosine_score``), the final per-probe rank (``_top_k_per_probe``), the
+Hamming-ball probe explode (``_hamming_ball``) and the IVF probe route plus
+its query half (``_ivf_probe_topk``).
 """
 
 from __future__ import annotations
@@ -45,6 +50,19 @@ def _norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
+
+
+def _cosine_score(a: Column, b: Column, norm_a: Column, norm_b: Column) -> Column:
+    """Cosine from precomputed norms, rounded to 6 digits as the oracles do."""
+    return F.round(_dot(a, b) / (norm_a * norm_b), 6)
+
+
+def _top_k_per_probe(scored: DataFrame, k: int) -> DataFrame:
+    """Rank (probe_id, vec_id, score) rows per probe by (score desc, vec_id
+    asc) and keep rank <= k."""
+    w = Window.partitionBy("probe_id").orderBy(F.desc("score"), F.asc("vec_id"))
+    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
+            .where(F.col("rank") <= k))
 
 
 # Higher-order array functions (zip_with/aggregate) evaluate interpreted,
@@ -92,16 +110,14 @@ def brute_force_topk(df: DataFrame, probes: DataFrame, k: int,
               .select("_part",
                       F.col(probe_id_col).alias("probe_id"),
                       F.col(id_col).alias("vec_id"),
-                      F.round(_dot(F.col("_v"), F.col("_p"))
-                              / (F.col("_nv") * F.col("_np")), 6).alias("score")))
+                      _cosine_score(F.col("_v"), F.col("_p"), F.col("_nv"),
+                                    F.col("_np")).alias("score")))
     w_local = Window.partitionBy("_part", "probe_id").orderBy(
         F.desc("score"), F.asc("vec_id"))
     survivors = (scored.withColumn("_lr", F.row_number().over(w_local))
                  .where(F.col("_lr") <= k)
                  .drop("_lr", "_part"))
-    w = Window.partitionBy("probe_id").orderBy(F.desc("score"), F.asc("vec_id"))
-    return (survivors.withColumn("rank", F.row_number().over(w).cast("long"))
-            .where(F.col("rank") <= k))
+    return _top_k_per_probe(survivors, k)
 
 
 def hyperplanes(dim: int, nbits: int) -> np.ndarray:
@@ -142,6 +158,13 @@ def probe_masks(nbits: int, multi_probe: int) -> list[int]:
         for combo in itertools.combinations(range(nbits), d):
             masks.append(sum(1 << b for b in combo))
     return masks
+
+
+def _hamming_ball(sig: Column, nbits: int, multi_probe: int) -> Column:
+    """Explode a signature into every bucket within Hamming distance
+    ``multi_probe`` of it, one row per probe mask."""
+    return F.explode(F.array(*[sig.bitwiseXOR(F.lit(m).cast("long"))
+                               for m in probe_masks(nbits, multi_probe)]))
 
 
 def with_lsh_signature(df: DataFrame, vec_col: str, dim: int, nbits: int,
@@ -190,14 +213,9 @@ def lsh_topk(df: DataFrame, probes: DataFrame, k: int, nbits: int = 12,
         data_sig = df.withColumn("_sig", lsh_signature_col(F.col(vec_col), planes))
     else:
         data_sig = df.withColumn("_sig", F.col(sig_col))
-    base_sig = probes.withColumn("_psig", lsh_signature_col(F.col(probe_vec_col), planes))
-    masks = probe_masks(nbits, multi_probe)
-    if len(masks) > 1:
-        flips = F.array(*[F.col("_psig").bitwiseXOR(F.lit(m).cast("long"))
-                          for m in masks])
-        probe_sig = base_sig.withColumn("_psig", F.explode(flips))
-    else:
-        probe_sig = base_sig
+    probe_sig = (probes
+                 .withColumn("_psig", lsh_signature_col(F.col(probe_vec_col), planes))
+                 .withColumn("_psig", _hamming_ball(F.col("_psig"), nbits, multi_probe)))
     vd = F.col(vec_col).cast("array<double>")
     pd_ = F.col(probe_vec_col).cast("array<double>")
     data_sig = data_sig.withColumn("_nv", _norm(vd))
@@ -207,11 +225,9 @@ def lsh_topk(df: DataFrame, probes: DataFrame, k: int, nbits: int = 12,
             .dropDuplicates([probe_id_col, id_col]))
     scored = cand.select(F.col(probe_id_col).alias("probe_id"),
                          F.col(id_col).alias("vec_id"),
-                         F.round(_dot(vd, pd_)
-                                 / (F.col("_nv") * F.col("_np")), 6).alias("score"))
-    w = Window.partitionBy("probe_id").orderBy(F.desc("score"), F.asc("vec_id"))
-    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
-            .where(F.col("rank") <= k))
+                         _cosine_score(vd, pd_, F.col("_nv"),
+                                       F.col("_np")).alias("score"))
+    return _top_k_per_probe(scored, k)
 
 
 # -- IVF (inverted-file) ANN ------------------------------------------------------
@@ -299,10 +315,20 @@ def ivf_topk_clustered(spark, table: str, probes: DataFrame, k: int,
     centroids_table is required (written by write_clustered_corpus):
     re-deriving centroids here would either run a driver-side job during
     query construction or rescan the whole corpus — both anti-patterns."""
-    corpus = spark.table(table)
-    cents = spark.table(centroids_table)
+    return _ivf_probe_topk(spark.table(table), spark.table(centroids_table),
+                           probes, k, n_probe, id_col, vec_col, probe_id_col,
+                           probe_vec_col)
+
+
+def _ivf_probe_topk(corpus: DataFrame, cents: DataFrame, probes: DataFrame,
+                    k: int, n_probe: int, id_col: str, vec_col: str,
+                    probe_id_col: str, probe_vec_col: str) -> DataFrame:
+    """Route each probe to its n_probe nearest centroids (c, cvec) by
+    (cosine desc, c asc); score and rank the corpus rows in those clusters."""
     pv = F.col(probe_vec_col).cast("array<double>")
     cd = F.col("cvec").cast("array<double>")
+    vd = F.col(vec_col).cast("array<double>")
+    # probes x centroids is tiny — the plain per-pair cosine is fine here
     pscore = (probes.crossJoin(F.broadcast(cents))
               .select(probe_id_col, probe_vec_col, "c",
                       cosine(pv, cd).alias("_s")))
@@ -311,17 +337,14 @@ def ivf_topk_clustered(spark, table: str, probes: DataFrame, k: int,
               .where(F.col("_r") <= n_probe)
               .select(probe_id_col, probe_vec_col,
                       F.col("c").alias("cluster")))
-    cand = (corpus.withColumn("_nv", _norm(F.col(vec_col).cast("array<double>")))
+    cand = (corpus.withColumn("_nv", _norm(vd))
             .join(F.broadcast(probed.withColumn("_np", _norm(pv))), "cluster")
             .where(F.col(id_col) != F.col(probe_id_col)))
-    vd = F.col(vec_col).cast("array<double>")
     scored = cand.select(F.col(probe_id_col).alias("probe_id"),
                          F.col(id_col).alias("vec_id"),
-                         F.round(_dot(vd, pv)
-                                 / (F.col("_nv") * F.col("_np")), 6).alias("score"))
-    w = Window.partitionBy("probe_id").orderBy(F.desc("score"), F.asc("vec_id"))
-    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
-            .where(F.col("rank") <= k))
+                         _cosine_score(vd, pv, F.col("_nv"),
+                                       F.col("_np")).alias("score"))
+    return _top_k_per_probe(scored, k)
 
 
 def ivf_topk(df: DataFrame, probes: DataFrame, k: int,
@@ -338,33 +361,11 @@ def ivf_topk(df: DataFrame, probes: DataFrame, k: int,
     deterministic (md5-hash centroid seeds, sequential-fold cosine), so the
     whole pipeline has an exact DuckDB oracle."""
     cents = ivf_centroids(df, n_centroids, id_col, vec_col)
-    vd = F.col(vec_col).cast("array<double>")
-    pv = F.col(probe_vec_col).cast("array<double>")
-    cd = F.col("cvec").cast("array<double>")
     assigned = (df.join(ivf_assign(df, cents, id_col, vec_col),
                         F.col(id_col) == F.col("_id"))
-                .drop("_id")
-                .withColumn("_nv", _norm(vd)))
-    # probe-side: top n_probe clusters per probe by centroid cosine
-    # (probes x centroids is tiny — the plain per-pair cosine is fine here)
-    pscore = (probes.crossJoin(F.broadcast(cents))
-              .select(probe_id_col, probe_vec_col, "c",
-                      cosine(pv, cd).alias("_s")))
-    wp = Window.partitionBy(probe_id_col).orderBy(F.desc("_s"), F.asc("c"))
-    probed = (pscore.withColumn("_r", F.row_number().over(wp))
-              .where(F.col("_r") <= n_probe)
-              .select(probe_id_col, probe_vec_col,
-                      F.col("c").alias("cluster"))
-              .withColumn("_np", _norm(pv)))
-    cand = (assigned.join(F.broadcast(probed), "cluster")
-            .where(F.col(id_col) != F.col(probe_id_col)))
-    scored = cand.select(F.col(probe_id_col).alias("probe_id"),
-                         F.col(id_col).alias("vec_id"),
-                         F.round(_dot(vd, pv)
-                                 / (F.col("_nv") * F.col("_np")), 6).alias("score"))
-    w = Window.partitionBy("probe_id").orderBy(F.desc("score"), F.asc("vec_id"))
-    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
-            .where(F.col("rank") <= k))
+                .drop("_id"))
+    return _ivf_probe_topk(assigned, cents, probes, k, n_probe, id_col,
+                           vec_col, probe_id_col, probe_vec_col)
 
 
 def ivf_topk_oracle_sql(table: str, probe_ids: list[int], k: int,
@@ -474,11 +475,9 @@ def embedding_near_dup_pairs(df: DataFrame, threshold: float, dim: int,
         sigs = with_lsh_signature(df, vec_col, dim, nbits)
     else:
         sigs = df.withColumn("_sig", F.col(sig_col))
-    masks = probe_masks(nbits, multi_probe)
     a = sigs.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"),
                     F.col("_sig").alias("_sa"))
-    a_exp = a.withColumn("_sb", F.explode(F.array(
-        *[F.col("_sa").bitwiseXOR(F.lit(m).cast("long")) for m in masks])))
+    a_exp = a.withColumn("_sb", _hamming_ball(F.col("_sa"), nbits, multi_probe))
     b = sigs.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"),
                     F.col("_sig").alias("_sb"))
     id_type = df.schema[id_col].dataType.simpleString()
@@ -599,7 +598,6 @@ def incremental_near_dup_filter(new_shard: DataFrame, corpus: DataFrame,
     shard probes (the corpus text/vectors outside those buckets are never
     read). The new shard (small side) computes its signatures fresh and is
     broadcast after exploding its probe masks."""
-    masks = probe_masks(nbits, multi_probe)
     new_sig = with_lsh_signature(new_shard, vec_col, dim, nbits)
     vn = F.col("_vn").cast("array<double>")
     vc = F.col(vec_col).cast("array<double>")
@@ -607,9 +605,8 @@ def incremental_near_dup_filter(new_shard: DataFrame, corpus: DataFrame,
                             F.col(vec_col).alias("_vn"),
                             F.col("_sig").alias("_nsig"))
              .withColumn("_nn", _norm(vn))
-             .withColumn("_sig", F.explode(F.array(
-                 *[F.col("_nsig").bitwiseXOR(F.lit(m).cast("long"))
-                   for m in masks]))))
+             .withColumn("_sig", _hamming_ball(F.col("_nsig"), nbits,
+                                               multi_probe)))
     # broadcast the exploded new shard; the corpus scan joins on its
     # partition column -> dynamic partition pruning limits the scan to
     # the probed buckets (plan-asserted in tests). Corpus norm is computed
@@ -620,7 +617,7 @@ def incremental_near_dup_filter(new_shard: DataFrame, corpus: DataFrame,
         F.col(id_col) != F.col("_nid"))
     dup_ids = (cand.select(
         "_nid",
-        (F.round(_dot(vc, vn) / (F.col("_nc") * F.col("_nn")), 6)
+        (_cosine_score(vc, vn, F.col("_nc"), F.col("_nn"))
          >= threshold).alias("_isdup"))
         .where(F.col("_isdup"))
         .select(F.col("_nid").alias(id_col)).distinct())

@@ -451,26 +451,105 @@ def test_lsh_signature_plan_size_independent_of_dim(spark):
 
 def test_simhash_blocking_generalizes_beyond_3(spark):
     """max_hamming > 3 must derive more blocks (pigeonhole) and still find
-    every qualifying pair — compare against an all-pairs filter."""
+    every qualifying pair — compare against an all-pairs filter. The
+    explicit (max_hamming, n_blocks) cases reach every combo-key layout:
+    the derived defaults (a scalar block at d=0, packed bigints at d=3 and
+    d=5) and two array keys, (0, 2) and (1, 32), whose combo-id bits plus
+    member block widths exceed 63 (1 + 64 and 5 + 62). Planted copies of a
+    few signatures at Hamming 0 and 1 make the small-d cases non-vacuous."""
     from sketches_rust_spark.operators.dedup import (
-        simhash_near_pairs, simhash_signatures)
+        incremental_simhash_filter, simhash_near_pairs, simhash_signatures)
 
     rows = [(i, f"tok{i} " * 3 + "shared words mostly common here "
              + ("x y z" if i % 2 else "x y w")) for i in range(40)]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    sigs = simhash_signatures(df).cache()
+    text_sigs = simhash_signatures(df)
+    sp = {r["_id"]: r["simhash"] for r in text_sigs.collect()}
+    planted = [(100 + i, sp[i] ^ (1 << (5 * i) if i % 2 else 0))
+               for i in range(8)]
+    sp.update(planted)
+    sigs = text_sigs.union(
+        spark.createDataFrame(planted, text_sigs.schema)).cache()
+    ids = sorted(sp)
+
+    def hamming(a, b):
+        return bin(sp[a] ^ sp[b]).count("1")
+
     try:
-        for d in (0, 3, 5):
+        for d, n_blocks in ((0, None), (3, None), (5, None), (0, 2), (1, 32)):
             got = {(r["id_a"], r["id_b"], r["hamming"])
-                   for r in simhash_near_pairs(sigs, max_hamming=d).collect()}
-            sp = {r["_id"]: r["simhash"] for r in sigs.collect()}
-            ids = sorted(sp)
-            want = {(a, b, bin(sp[a] ^ sp[b]).count("1"))
+                   for r in simhash_near_pairs(sigs, max_hamming=d,
+                                               n_blocks=n_blocks).collect()}
+            want = {(a, b, hamming(a, b))
                     for i, a in enumerate(ids) for b in ids[i + 1:]
-                    if bin(sp[a] ^ sp[b]).count("1") <= d}
-            assert got == want, f"max_hamming={d}"
+                    if hamming(a, b) <= d}
+            assert got == want, f"max_hamming={d}, n_blocks={n_blocks}"
+        # the incremental shard-vs-corpus join on the (1, 32) array key
+        new_ids = list(range(0, 40, 3))
+        corpus = sigs.where(~F.col("_id").isin(new_ids))
+        got = {r["doc_id"] for r in incremental_simhash_filter(
+            df.where(F.col("doc_id").isin(new_ids)), corpus,
+            max_hamming=1, n_blocks=32).collect()}
+        want = {n for n in new_ids
+                if not any(hamming(n, c) <= 1 for c in ids if c not in new_ids)}
+        assert got == want
+        assert {0, 3, 6} <= set(new_ids) - want  # the planted copies bite
     finally:
         sigs.unpersist()
+
+
+def _equi_join_keys(jplan) -> list[tuple]:
+    """((name, type), ...) of the left keys of every equi-join in a
+    physical plan."""
+    found = []
+
+    def walk(node):
+        if node.getClass().getSimpleName() in (
+                "SortMergeJoinExec", "ShuffledHashJoinExec",
+                "BroadcastHashJoinExec"):
+            keys = node.leftKeys()
+            found.append(tuple(
+                (keys.apply(i).toString().split("#")[0],
+                 keys.apply(i).dataType().simpleString())
+                for i in range(keys.length())))
+        children = node.children()
+        for i in range(children.length()):
+            walk(children.apply(i))
+
+    walk(jplan)
+    return found
+
+
+def test_simhash_packed_join_key_in_curate_configs(spark, monkeypatch):
+    """The packed combo key exists because a scalar bigint join key
+    measured faster than array<bigint>. Pin it for the curation
+    configurations: simhash_near_pairs at n_blocks 4 and 6 and
+    dedup_keep_canonical_simhash at n_blocks 6 (whose blocked join runs
+    inside near_dup_clusters, so its input plan is captured there) join on
+    ONE bigint combo key, and no join anywhere keys on an array."""
+    from sketches_rust_spark.operators import dedup
+
+    df = spark.createDataFrame(
+        [(i, f"tok{i} shared words here") for i in range(20)],
+        ["doc_id", "text"])
+    sigs = dedup.simhash_signatures(df)
+    plans = [dedup.simhash_near_pairs(sigs, 3, n_blocks=nb)
+             ._jdf.queryExecution().sparkPlan() for nb in (4, 6)]
+    cc_inputs = []
+    cc = dedup.near_dup_clusters
+
+    def spy(pairs, *args, **kwargs):
+        cc_inputs.append(pairs._jdf.queryExecution().sparkPlan())
+        return cc(pairs, *args, **kwargs)
+
+    monkeypatch.setattr(dedup, "near_dup_clusters", spy)
+    dedup.dedup_keep_canonical_simhash(df, 3, n_blocks=6).collect()
+    assert len(cc_inputs) == 1
+    for plan in plans + cc_inputs:
+        keys = _equi_join_keys(plan)
+        combo = [k for k in keys if {"q", "v"} & {name for name, _ in k}]
+        assert combo == [(("v", "bigint"),)], keys
+        assert not any(t.startswith("array") for k in keys for _, t in k)
 
 
 def test_simhash_max_hamming_validation(spark):
@@ -887,6 +966,35 @@ def test_cc_local_solve_second_gate_contracted_graph(spark, monkeypatch):
     assert stats.get("local_solve") is True and stats["rounds"] == 0
     assert all(labels[i] == clique_ids[0] for i in clique_ids)
     assert all(labels[i] == path_ids[0] for i in path_ids)
+
+
+def test_cc_float_ids_with_nan_take_distributed_loop(spark, monkeypatch):
+    """The driver union-find gate takes only integral or string ids. Spark
+    orders NaN above every number and treats all NaNs as one join/group
+    key, while Python's min(nan, 1.0) is nan and distinct NaN objects are
+    distinct dict keys, so a DoubleType pairs table holding NaN must get the
+    labels of the forced distributed loop, without a local solve."""
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    from sketches_rust_spark.operators.dedup import near_dup_clusters
+
+    nan = float("nan")
+    schema = StructType([StructField("id_a", DoubleType()),
+                         StructField("id_b", DoubleType())])
+    pairs = spark.createDataFrame([(1.0, nan), (2.0, nan), (3.0, 4.0)],
+                                  schema)
+
+    def labels(**kwargs):
+        return sorted((repr(r._id), repr(r.cluster)) for r in
+                      near_dup_clusters(pairs, **kwargs).collect())
+
+    stats: dict = {}
+    got = labels(stats=stats)
+    monkeypatch.setenv("SKETCH_CC_LOCAL_EDGE_CAP", "0")
+    assert got == labels()
+    assert got == [("1.0", "1.0"), ("2.0", "1.0"), ("3.0", "3.0"),
+                   ("4.0", "3.0"), ("nan", "1.0")]
+    assert "local_solve" not in stats
 
 
 def test_numpy_seq_dot_matches_expression_fold(spark):
